@@ -3,9 +3,11 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload wordcount --seed 1 --seconds 14 --trace 0
+    python3 perfbench/run.py --workload wordcount --seed 1 --seconds 20 --trace 0
 
-Workloads: wordcount and upsert (streams) and registry (batch queries). The last stdout line is one JSON object with the keys
+Workloads: wordcount and upsert (streams) and registry (batch queries);
+perfbench/METRICS.md says what each runs and measures. The last stdout
+line is one JSON object with the keys
 `correct`, `attempted`, `failed` and `metrics`: end-to-end metrics with
 `--trace 0`, per-layer metrics with `--trace 1`. The exit code is 1 when
 an output check fails, 2 when the checkout cannot be built or run.

@@ -3,10 +3,8 @@ package perfbench
 import java.lang.management.ManagementFactory
 
 import graft.SessionTuning
-import graft.pipeline.Instrumentation
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 /** Outside-in benchmark of the library's public API.
   *
@@ -63,6 +61,13 @@ object Main {
     ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }
 
+  /** Scheduler totals of the measured work: the stages of the job groups
+    * `keepGroup` accepts, submitted inside a measured window. */
+  def totals(sched: SchedulerProbe, measured: Measured, keepGroup: String => Boolean): SchedTotals = {
+    sched.awaitQuiet()
+    sched.totals((group, submittedMs) => keepGroup(group) && measured.covers(submittedMs))
+  }
+
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
     val tracer = new Tracer(a.trace)
@@ -72,46 +77,47 @@ object Main {
     }
     spark.sparkContext.setLogLevel("WARN")
     val sessionMs = tracer.nowMs - a.launchedAtMs
-    val sched = new SchedulerProbe(tracer, a.cpus)
-    val instr = new CountingInstrumentation
+    val sched = new SchedulerProbe(tracer)
+    val measured = new Measured(tracer)
     if (a.trace) {
       spark.sparkContext.addSparkListener(sched)
       spark.listenerManager.register(new PlanningProbe(tracer))
-      Instrumentation.install(instr)
     }
-    val codegen0 = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
     val run0 = tracer.nowMs
-    val (result, layers) =
-      try {
-        if (streaming) StreamRun(a, spark, tracer, sched, sessionMs)
-        else RegistryRun(a, spark, tracer, sched)
-      } finally {
-        if (a.trace) Instrumentation.uninstall()
-      }
+    val (result, layers, keepGroup) =
+      if (streaming) StreamRun(a, spark, tracer, sched, measured, sessionMs)
+      else RegistryRun(a, spark, tracer, sched, measured)
     val runMs = tracer.nowMs - run0
     val common = if (!a.trace) Map.empty[String, Double] else {
+      val t = totals(sched, measured, keepGroup)
+      val instr = measured.instr
       Map(
-        "codegen.compiles" -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - codegen0._1).toDouble,
-        "codegen.compile_ms" -> (CodeGenerator.compileTime - codegen0._2) / 1e6,
-        "sched.jobs" -> sched.jobs.get.toDouble,
-        "sched.stages" -> sched.stages.get.toDouble,
-        "sched.tasks" -> sched.tasks.get.toDouble,
-        "exec.task_run_ms_sum" -> sched.taskRunMs.get.toDouble,
-        "exec.task_cpu_ms_sum" -> sched.taskCpuNs.get / 1e6,
-        "exec.gc_ms_sum" -> sched.gcMs.get.toDouble,
-        "exec.utilization" -> sched.utilization(runMs),
-        "exec.failed_tasks" -> sched.failedTasks.get.toDouble,
-        "shuffle.write_bytes" -> sched.shuffleWrite.get.toDouble,
-        "shuffle.read_bytes" -> sched.shuffleRead.get.toDouble,
-        "spill.disk_bytes" -> sched.spillDisk.get.toDouble,
-        "spill.memory_bytes" -> sched.spillMemory.get.toDouble,
+        "codegen.compiles" -> measured.compiles.toDouble,
+        "codegen.compile_ms" -> measured.compileNs / 1e6,
+        "sched.jobs" -> t.jobs.toDouble,
+        "sched.stages" -> t.stages.toDouble,
+        "sched.tasks" -> t.tasks.toDouble,
+        "exec.task_run_ms_sum" -> t.taskRunMs.toDouble,
+        "exec.task_cpu_ms_sum" -> t.taskCpuNs / 1e6,
+        "exec.gc_ms_sum" -> t.gcMs.toDouble,
+        // busy share of the executor cores over the measured windows
+        "exec.utilization" -> t.taskRunMs / math.max(1.0, measured.wallMs * a.cpus),
+        "exec.failed_tasks" -> t.failedTasks.toDouble,
+        "shuffle.write_bytes" -> t.shuffleWrite.toDouble,
+        "shuffle.read_bytes" -> t.shuffleRead.toDouble,
+        "spill.disk_bytes" -> t.spillDisk.toDouble,
+        "spill.memory_bytes" -> t.spillMemory.toDouble,
         "pipeline.fanout" -> (if (instr.calls.get == 0) 0.0 else instr.emitted.get.toDouble / instr.calls.get),
         "pipeline.dead_letters" -> instr.failures.get.toDouble,
-        "queries.build_jobs" -> sched.jobsByKind.getOrElse("build", 0L).toDouble,
+        "queries.build_jobs" -> totals(sched, measured, _.startsWith("build:")).jobs.toDouble,
         "trace.overhead_frac" -> tracer.recordingCostNs / 1e6 / math.max(1.0, runMs),
       )
     }
     spark.stop()
+    // the single-thread baseline runs after every other figure is read
+    val scaling =
+      if (a.trace && a.workload == "wordcount") Map("scaling.wordcount_1c_msgs_per_s" -> StreamRun.singleCore(a))
+      else Map.empty
     if (a.trace) tracer.writeJsonl(java.nio.file.Paths.get(a.work, s"trace-${a.workload}-${a.seed}.jsonl"))
     val out =
       if (!a.trace) result
@@ -120,7 +126,7 @@ object Main {
         // untraced run's: the tracing overhead as a user would see it
         val traced = result.metrics.map(m => s"trace.${m.name}" -> m.value).toMap
         result.copy(metrics = Layers.All.map { case (n, unit) =>
-          Metric(n, (layers ++ common ++ traced).getOrElse(n, 0.0), unit)
+          Metric(n, (layers ++ common ++ scaling ++ traced).getOrElse(n, 0.0), unit)
         })
       }
     println(out.json)
@@ -158,7 +164,8 @@ object Layers {
     "cache.persisted_rdds_max" -> "count", "cache.storage_bytes_max" -> "bytes",
     "gen.late_ms_p99" -> "ms", "trace.overhead_frac" -> "ratio",
     "trace.throughput_per_s" -> "1/s", "trace.latency_p50_ms" -> "ms",
-    "trace.uncovered_queries" -> "count", "latency.batches_beyond_p90" -> "count",
+    "trace.uncovered_queries" -> "count", "trace.span_coverage_min" -> "ratio",
+    "latency.batches_beyond_p95" -> "count",
     "scaling.wordcount_1c_msgs_per_s" -> "1/s",
   )
 
@@ -178,62 +185,78 @@ object Layers {
 
 /** The stream workloads. Two set-up probes (start a fresh pipeline,
   * commit one batch, stop) precede the measured pipeline, whose set-up
-  * is the third sample; its open loop runs unmeasured first, so the
-  * JIT settles before latency is taken. */
+  * is the third sample. Its open loop runs unmeasured for half of
+  * `--seconds` first: with a quarter, the median latency of a second
+  * pipeline in the same JVM read 13-37% below the first, so the JIT had
+  * not settled. */
 object StreamRun {
   val SetupProbes = 2
+  /** Round index of the measured pipeline. */
+  val MeasuredRound = SetupProbes
   /** Shares of `--seconds` for the unmeasured and the measured open loop. */
-  val WarmShare = 0.25
-  val OpenShare = 0.6
+  val WarmShare = 0.5
+  val OpenShare = 0.4
 
-  def apply(a: Main.Args, spark: SparkSession, tracer: Tracer, sched: SchedulerProbe,
-      sessionMs: Double): (Result, Map[String, Double]) = {
+  def apply(a: Main.Args, spark: SparkSession, tracer: Tracer, sched: SchedulerProbe, measured: Measured,
+      sessionMs: Double): (Result, Map[String, Double], String => Boolean) = {
     val spec = Streams.Specs(a.workload)
     val probe = new ProgressProbe
     spark.streams.addListener(probe)
     val dir = s"${a.work}/streams"
+    val unmeasured = new Measured(new Tracer(false))
     val probes = (0 until SetupProbes).map { r =>
-      Streams.round(spark, spec, a.seed, r, 0L, 0L, 0, dir, a.cpus, tracer, probe)
+      Streams.round(spark, spec, a.seed, r, 0L, 0L, 0, dir, a.cpus, tracer, probe, unmeasured)
     }
-    val measured = Streams.round(spark, spec, a.seed, SetupProbes, (a.seconds * 1000 * WarmShare).toLong,
-      (a.seconds * 1000 * OpenShare).toLong, spec.backlog, dir, a.cpus, tracer, probe)
-    val all = probes :+ measured
+    val openMs = (a.seconds * 1000 * OpenShare).toLong
+    val warmMs = (a.seconds * 1000 * WarmShare).toLong
+    val round = Streams.round(spark, spec, a.seed, MeasuredRound, warmMs, openMs, spec.backlog, dir, a.cpus, tracer,
+      probe, measured)
+    val all = probes :+ round
     val heapPeak = all.map(_.heapMb).max
     System.err.println(f"[perfbench] setup ${all.map(_.setupMs.round).mkString(", ")} ms; measured done at " +
       f"${(tracer.nowMs - a.launchedAtMs) / 1000}%.1f s")
     val failures = all.flatMap(_.failures)
     failures.take(20).foreach(f => System.err.println(s"[perfbench] FAILED $f"))
-    val lat = measured.latenciesMs
-    val beyond = measured.batchesBeyondP90
+    if (failures.size > 20) System.err.println(s"[perfbench] ... ${failures.size} failures in all")
+    val lat = round.latenciesMs
+    val beyond = round.batchesBeyondP95
     val result = Result(
       correct = failures.isEmpty,
       attempted = all.map(_.attempted).sum,
       failed = failures.size.toLong,
       metrics = Seq(
         Metric("setup_s", (sessionMs + Stats.median(all.map(_.setupMs))) / 1000, "s"),
-        Metric("throughput_per_s", measured.drainMsgsPerSec, "1/s"),
+        Metric("throughput_per_s", round.drainMsgsPerSec, "1/s"),
         Metric("latency_p50_ms", Stats.percentile(lat, 50), "ms"),
-        Metric("latency_p90_ms", Stats.percentile(lat, 90), "ms"),
+        Metric("latency_p95_ms", Stats.percentile(lat, 95), "ms"),
         Metric("heap_peak_mb", heapPeak, "MB"),
       ))
-    System.err.println(s"[perfbench] ${a.workload}: ${lat.size} latency samples, $beyond batches beyond p90, " +
-      s"${measured.progress.size} batches")
+    System.err.println(s"[perfbench] ${a.workload}: ${lat.size} latency samples, $beyond batches beyond p95, " +
+      s"${round.progress.size} batches")
 
+    // the measured pipeline's micro-batches: its query's job group
+    val keepGroup = (g: String) => g == round.runId
     val layers = if (!a.trace) Map.empty[String, Double] else {
-      sched.awaitQuiet()
-      val ps = measured.progress
+      // batches of the measured window (the primer batch is set-up)
+      def inRound(s: Span) = s.trace == s"round$MeasuredRound" && measured.covers(s.startMs)
+      val batchSpans = tracer.named("batch").filter(inRound)
+      val ps = round.progress.filter(p => measured.covers(java.time.Instant.parse(p.timestamp).toEpochMilli.toDouble))
       def dur(k: String) = ps.map(p => Option(p.durationMs.get(k)).map(_.toDouble).getOrElse(0.0))
-      val open = ps.filter(p => p.sources.head.endOffset.trim.toLong <= measured.openRange._2)
+      // messages a batch admitted, from its offsets: `numInputRows`
+      // counts a source once per scan, and a sink may scan it twice
+      def admitted(p: StreamingQueryProgress) =
+        p.sources.head.endOffset.trim.toDouble - Option(p.sources.head.startOffset).map(_.trim.toDouble).getOrElse(0.0)
+      val open = ps.filter(p => p.sources.head.endOffset.trim.toLong <= round.openRange._2)
       val backlog = open.map(p => p.sources.head.latestOffset.trim.toDouble - p.sources.head.endOffset.trim.toDouble)
       val lastState = ps.lastOption.flatMap(_.stateOperators.headOption)
       val states = ps.flatMap(_.stateOperators.headOption)
-      val writes = tracer.named("sink.write").map(_.ms)
-      val batches = tracer.named("batch")
+      val writes = tracer.named("sink.write").filter(inRound).map(_.ms)
+      val stages = tracer.named("stage").filter(st => keepGroup(st.trace))
       Map(
         "sources.latest_offset_ms_p50" -> Stats.median(dur("latestOffset")),
         "sources.get_batch_ms_p50" -> Stats.median(dur("getBatch")),
         "sources.backlog_max_msgs" -> (if (backlog.isEmpty) 0.0 else backlog.max),
-        "sources.enqueue_us_p99" -> Stats.percentile(tracer.named("gen.enqueue").map(_.ms * 1000), 99),
+        "sources.enqueue_us_p99" -> Stats.percentile(tracer.named("gen.enqueue").filter(inRound).map(_.ms * 1000), 99),
         "commit.wal_ms_p50" -> Stats.median(dur("walCommit")),
         "commit.offsets_ms_p50" -> Stats.median(dur("commitOffsets")),
         "commit.trigger_ms_p50" -> Stats.median(dur("triggerExecution")),
@@ -243,38 +266,37 @@ object StreamRun {
         "pipeline.add_batch_ms_p50" -> Stats.median(dur("addBatch")),
         "pipeline.add_batch_ms_p95" -> Stats.percentile(dur("addBatch"), 95),
         "pipeline.batches" -> ps.size.toDouble,
-        "pipeline.batch_rows_p50" -> Stats.median(ps.map(_.numInputRows.toDouble)),
+        "pipeline.batch_rows_p50" -> Stats.median(ps.map(admitted)),
         "state.rows_total_end" -> lastState.map(_.numRowsTotal.toDouble).getOrElse(0.0),
         "state.memory_bytes_end" -> lastState.map(_.memoryUsedBytes.toDouble).getOrElse(0.0),
         "state.commit_ms_p50" -> Stats.median(states.map(_.commitTimeMs.toDouble)),
         "state.rows_updated_p50" -> Stats.median(states.map(_.numRowsUpdated.toDouble)),
         "sinks.write_ms_p50" -> Stats.median(writes),
         "sinks.write_ms_p95" -> Stats.percentile(writes, 95),
-        "sinks.table_rows_end" -> measured.tableRows.toDouble,
+        "sinks.table_rows_end" -> round.tableRows.toDouble,
         // each upsert rewrites its table: rows written per row upserted
         "sinks.rewrite_ratio" -> (if (a.workload != "upsert") 0.0 else
-          sched.recordsWritten.get / math.max(1.0, all.flatMap(_.progress).map(_.numInputRows).sum.toDouble)),
+          Main.totals(sched, measured, keepGroup).recordsWritten / math.max(1.0, ps.map(admitted).sum)),
         "sinks.replayed_batches" -> all.map(_.replayed).sum.toDouble,
-        "sched.driver_gap_ms_sum" -> Layers.driverGapMs(batches.map(b => (b.startMs, b.endMs)), tracer.named("stage")),
-        "gen.late_ms_p99" -> Stats.percentile(measured.lateMs, 99),
-        "latency.batches_beyond_p90" -> beyond.toDouble,
-        "scaling.wordcount_1c_msgs_per_s" -> (if (a.workload == "wordcount") singleCore(a, spark) else 0.0),
+        "sched.driver_gap_ms_sum" -> Layers.driverGapMs(batchSpans.map(b => (b.startMs, b.endMs)), stages),
+        "gen.late_ms_p99" -> Stats.percentile(round.lateMs, 99),
+        "latency.batches_beyond_p95" -> beyond.toDouble,
       )
     }
-    (result, layers)
+    (result, layers, keepGroup)
   }
 
-  /** The same wordcount drain on one core: the single-thread baseline.
-    * Runs last, in a session of its own. */
-  def singleCore(a: Main.Args, spark: SparkSession): Double = {
-    spark.stop()
+  /** The wordcount drain on one core, in a session of its own: the
+    * single-thread baseline. */
+  def singleCore(a: Main.Args): Double = {
     val one = Main.session("local[1]", 1, streaming = true, a.work)
     val probe = new ProgressProbe
     one.streams.addListener(probe)
     val spec = Streams.Specs("wordcount")
+    val off = new Tracer(false)
     try {
-      val rr = Streams.round(one, spec, a.seed, SetupProbes + 1, 0L, 0L, spec.backlog, s"${a.work}/streams", 1,
-        new Tracer(false), probe)
+      val rr = Streams.round(one, spec, a.seed, MeasuredRound + 1, 0L, 0L, spec.backlog, s"${a.work}/streams", 1,
+        off, probe, new Measured(off))
       require(rr.failures.isEmpty, s"single-core wordcount failed its check: ${rr.failures.take(3)}")
       rr.drainMsgsPerSec
     } finally one.stop()
@@ -284,7 +306,8 @@ object StreamRun {
 /** The registry workload: a fixed sample of registry queries in one
   * session, each on its first execution. */
 object RegistryRun {
-  def apply(a: Main.Args, spark: SparkSession, tracer: Tracer, sched: SchedulerProbe): (Result, Map[String, Double]) = {
+  def apply(a: Main.Args, spark: SparkSession, tracer: Tracer, sched: SchedulerProbe,
+      measured: Measured): (Result, Map[String, Double], String => Boolean) = {
     val dir = s"${a.data}/sf0.01"
     // set-up, untimed by the suite: resolve every table once
     val tables = graft.Tables(spark, dir)
@@ -296,7 +319,7 @@ object RegistryRun {
     val setupMs = tracer.nowMs - a.launchedAtMs
     val queries = Registry.selected
     var cache = (0.0, 0.0)
-    val outcomes = Registry.run(spark, dir, queries, tracer, afterEach = () => {
+    val outcomes = Registry.run(spark, dir, queries, tracer, measured, afterEach = () => {
       val c = Layers.cacheSample(spark)
       cache = (math.max(cache._1, c._1), math.max(cache._2, c._2))
     })
@@ -318,35 +341,41 @@ object RegistryRun {
         Metric("setup_s", setupMs / 1000, "s"),
         Metric("throughput_per_s", timed.size / math.max(1e-9, suiteMs / 1000), "1/s"),
         Metric("latency_p50_ms", Stats.percentile(timed, 50), "ms"),
-        Metric("latency_p90_ms", Stats.percentile(timed, 90), "ms"),
+        Metric("latency_p95_ms", Stats.percentile(timed, 95), "ms"),
         Metric("heap_peak_mb", heapPeak, "MB"),
       ))
     outcomes.foreach(o => System.err.println(f"[perfbench] ${o.name}%-32s ${o.wallMs}%9.1f ms"))
 
+    // a query's build and its noop write; not the output checks
+    val keepGroup = (g: String) => g.startsWith("build:") || g.startsWith("exec:")
     val layers = if (!a.trace) Map.empty[String, Double] else {
       sched.awaitQuiet()
       val spans = tracer.all
       val windows = spans.filter(_.name == "query").map(s => (s.trace, s.startMs, s.endMs))
       val stages = spans.filter(_.name == "stage")
-      // a query's stages must fall inside its wall-time window
-      val uncovered = windows.count { case (q, s, e) =>
-        val parts = stages.filter(st => st.trace == s"build:$q" || st.trace == s"exec:$q")
-        val outside = parts.map(p => math.max(0.0, s - p.startMs) + math.max(0.0, p.endMs - e)).sum
-        outside > 0.1 * (e - s)
+      val plans = spans.filter(_.name.startsWith("plan."))
+      // the share of each query's wall time its build, planning and
+      // stage spans account for; the rest is driver time no layer names
+      val coverage = windows.map { case (q, s, e) =>
+        val parts = spans.filter(p => p.name == "query.build" && p.trace == q) ++ plans ++
+          stages.filter(st => st.trace == s"build:$q" || st.trace == s"exec:$q")
+        Stats.unionLength(parts.filter(p => p.endMs > s && p.startMs < e)
+          .map(p => (math.max(p.startMs, s), math.min(p.endMs, e)))) / math.max(1e-9, e - s)
       }
-      def phase(n: String) = spans.filter(_.name == s"plan.$n").filter(p =>
-        windows.exists { case (_, s, e) => p.startMs >= s - 1 && p.endMs <= e + 1 }).map(_.ms).sum
+      def phase(n: String) = plans.filter(_.name == s"plan.$n").filter(p => measured.covers(p.startMs)).map(_.ms).sum
       Map(
         "queries.build_ms_sum" -> spans.filter(_.name == "query.build").map(_.ms).sum,
         "plan.analysis_ms_sum" -> phase("analysis"),
         "plan.optimization_ms_sum" -> phase("optimization"),
         "plan.planning_ms_sum" -> phase("planning"),
-        "sched.driver_gap_ms_sum" -> Layers.driverGapMs(windows.map(w => (w._2, w._3)), stages),
+        "sched.driver_gap_ms_sum" ->
+          Layers.driverGapMs(windows.map(w => (w._2, w._3)), stages.filter(st => keepGroup(st.trace))),
         "cache.persisted_rdds_max" -> cache._1,
         "cache.storage_bytes_max" -> cache._2,
-        "trace.uncovered_queries" -> uncovered.toDouble,
+        "trace.uncovered_queries" -> coverage.count(_ < 0.9).toDouble,
+        "trace.span_coverage_min" -> (if (coverage.isEmpty) 0.0 else coverage.min),
       )
     }
-    (result, layers)
+    (result, layers, keepGroup)
   }
 }

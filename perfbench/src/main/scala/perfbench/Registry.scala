@@ -38,7 +38,7 @@ object Registry {
 
   /** Run `queries` in order. A query that throws is not timed. The
     * digest is taken after the timed write, outside the query's spans. */
-  def run(spark: SparkSession, dir: String, queries: Seq[GraftQuery], tracer: Tracer,
+  def run(spark: SparkSession, dir: String, queries: Seq[GraftQuery], tracer: Tracer, measured: Measured,
       afterEach: () => Unit = () => ()): Seq[Outcome] = {
     val sc = spark.sparkContext
     queries.map { q =>
@@ -47,12 +47,12 @@ object Registry {
       val outcome =
         try {
           val t0 = tracer.nowMs
-          val df = tracer.span("query") {
+          val df = measured(tracer.span("query") {
             val built = tracer.span("query.build")(q.run(spark, dir))
             sc.setJobGroup(s"exec:${q.name}", q.name)
             tracer.span("query.exec")(built.write.format("noop").mode("overwrite").save())
             built
-          }
+          })
           val wallMs = tracer.nowMs - t0
           sc.setJobGroup(s"check:${q.name}", q.name)
           Outcome(q.name, wallMs, digest(df), None)

@@ -11,7 +11,7 @@ import graft.pipeline._
 import graft.sinks.UpsertParquetSink
 import graft.sources.{QueueRamp, QueueRampProvider}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, max_by}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, StreamingQueryProgress}
 
 /** Fixed parameters of one stream workload.
@@ -87,7 +87,7 @@ final case class RoundResult(
     setupMs: Double,
     pipelineStartMs: Double,
     latenciesMs: Seq[Double],
-    batchesBeyondP90: Int,
+    batchesBeyondP95: Int,
     drainMsgsPerSec: Double,
     attempted: Long,
     failures: Seq[String],
@@ -96,20 +96,36 @@ final case class RoundResult(
     lateMs: Seq[Double],
     tableRows: Long,
     replayed: Long,
-    heapMb: Double)
+    heapMb: Double,
+    runId: String)
 
 object Streams {
 
+  /** Both streams share one traffic shape:
+    *  - `maxPerTrigger` 10,000: `graft.examples.ThroughputMain` feeds its
+    *    stream in chunks of 10k messages (200k in 20), close to the
+    *    reference's ~12k-message socket buffers that it cites
+    *    (`motorway/intersection.py:185-188`);
+    *  - `backlog` 100,000: ten of those chunks, so the drain rate rests
+    *    on ten full batches;
+    *  - `rate` 10,000 msg/s: one chunk a second, under half the wordcount
+    *    drain rate (22-24k msg/s on 4 vCPUs when this was written), so the
+    *    open loop runs below saturation. */
   val Specs: Map[String, StreamSpec] = Seq(
-    StreamSpec("wordcount", rate = 2000, backlog = 12000, maxPerTrigger = 2000),
-    StreamSpec("upsert", rate = 1000, backlog = 12000, maxPerTrigger = 3000),
+    StreamSpec("wordcount", rate = 10000, backlog = 100000, maxPerTrigger = 10000),
+    StreamSpec("upsert", rate = 10000, backlog = 100000, maxPerTrigger = 10000),
   ).map(s => s.name -> s).toMap
 
   /** Messages of the batch whose commit ends a pipeline's set-up. */
   val Primer = 200
 
-  val WordsPerSentence = 8
-  val Vocabulary = 5000
+  /** `ThroughputMain`'s five sentences hold 33 words: 6 per message as
+    * it counts them. */
+  val WordsPerSentence = 6
+  /** Words are Zipf(1.0) over 50,000 words: the exponent of Zipf's law
+    * for English word frequencies, over about the number of distinct
+    * word forms in the Brown corpus (a million words of English text). */
+  val Vocabulary = 50000
 
   // -- input generation (seeded) ---------------------------------------
 
@@ -128,20 +144,17 @@ object Streams {
 
   def word(rank: Int): String = "w" + Integer.toString(rank, 36)
 
-  def generate(workload: String, n: Int, rng: SplittableRandom): Events = workload match {
-    case "wordcount" =>
-      val z = new Zipf(Vocabulary, rng)
-      Events(Array.fill(n)(Array.fill(WordsPerSentence)(word(z.next())).mkString(" ")), Array.fill(n)(null))
-    case "upsert" =>
-      // skewed updates over a key space that grows throughout: one in
-      // five messages introduces a new key, the rest hit existing keys
-      // with a cubic bias toward the oldest (hottest) ones
-      var keys = 1
-      val group = Array.tabulate(n) { _ =>
-        if (rng.nextDouble() < 0.2) { keys += 1; s"k${keys - 1}" }
-        else s"k${(keys * math.pow(rng.nextDouble(), 3)).toInt}"
-      }
-      Events(Array.tabulate(n)(i => s"v$i"), group)
+  def generate(workload: String, n: Int, rng: SplittableRandom): Events = {
+    val z = new Zipf(Vocabulary, rng)
+    workload match {
+      case "wordcount" =>
+        Events(Array.fill(n)(Array.fill(WordsPerSentence)(word(z.next())).mkString(" ")), Array.fill(n)(null))
+      case "upsert" =>
+        // one update per message, keyed by a word of the same Zipf draw:
+        // a few hot keys take most updates, and rarer keys are still
+        // seen for the first time late in a run
+        Events(Array.tabulate(n)(i => s"v$i"), Array.fill(n)(word(z.next())))
+    }
   }
 
   // -- topology ----------------------------------------------------------
@@ -191,12 +204,8 @@ object Streams {
         val table = new UpsertParquetSink(s"$dir/table", Seq("key"))
         val sink = (df: DataFrame, batchId: Long) => {
           rec.synchronized(rec.seen(batchId))
-          // the sink keeps one row per key of a batch but cannot know
-          // which came last, so the caller reduces a batch to the last
-          // write per key (highest queue position) before upserting
-          val last = df.groupBy(col("groupingValue").as("key"))
-            .agg(max_by(col("content"), col("id").cast("long")).as("value"))
-          tracer.span("sink.write")(table.write(last, batchId))
+          val updates = df.select(col("groupingValue").as("key"), col("content").as("value"))
+          tracer.span("sink.write")(table.write(updates, batchId))
         }
         val run = Pipeline(spark).addRamp("updates", src)
           .addSink("updates", StreamSink.ForeachBatch(sink, OutputMode.Append, ckpt), qn)
@@ -212,9 +221,11 @@ object Streams {
 
   /** Start a fresh pipeline and commit a primer batch (set-up); run the
     * open loop for `warmMs` unmeasured, then `openMs` measured; drain a
-    * fixed backlog; stop, and check the sink. */
+    * fixed backlog; stop, and check the sink. The open loop and the
+    * drain are the round's `measured` window. */
   def round(spark: SparkSession, spec: StreamSpec, seed: Long, r: Int, warmMs: Long, openMs: Long,
-      backlog: Int, workDir: String, partitions: Int, tracer: Tracer, probe: ProgressProbe): RoundResult = {
+      backlog: Int, workDir: String, partitions: Int, tracer: Tracer, probe: ProgressProbe,
+      measured: Measured): RoundResult = {
     val openCount = (spec.rate * (warmMs + openMs) / 1000.0).toInt
     val measuredFrom = Primer + (spec.rate * warmMs / 1000.0).toInt
     val total = Primer + openCount + backlog
@@ -262,22 +273,25 @@ object Streams {
         }
       }
     }, "open-loop-generator")
-    if (openCount > 0) {
-      gen.start()
-      gen.join()
-      run.processAllAvailable()
-    }
-
     // drain: a fixed backlog at once, admitted maxPerTrigger at a time
     val b0 = Primer + openCount
-    val backlogAt = tracer.nowMs
-    (b0 until total).foreach(i => due(i) = backlogAt)
-    val d0 = System.nanoTime()
-    if (backlog > 0) tracer.span("drain") {
-      QueueRamp.enqueue(queue, (b0 until total).map(i => entry(events, i, backlogAt)))
-      run.processAllAvailable()
+    var drainSec = 0.0
+    def openAndDrain(): Unit = {
+      if (openCount > 0) {
+        gen.start()
+        gen.join()
+        run.processAllAvailable()
+      }
+      val backlogAt = tracer.nowMs
+      (b0 until total).foreach(i => due(i) = backlogAt)
+      val d0 = System.nanoTime()
+      if (backlog > 0) tracer.span("drain") {
+        QueueRamp.enqueue(queue, (b0 until total).map(i => entry(events, i, backlogAt)))
+        run.processAllAvailable()
+      }
+      drainSec = (System.nanoTime() - d0) / 1e9
     }
-    val drainSec = (System.nanoTime() - d0) / 1e9
+    if (openCount + backlog > 0) measured(openAndDrain()) else openAndDrain()
     val heapMb = Main.heapAfterGcMb() // with the pipeline's state still live
     run.stop()
     val progress = probe.awaitAll(query.id).filter(_.numInputRows > 0)
@@ -293,12 +307,12 @@ object Streams {
       (math.max(s, openRange._1) until math.min(e, openRange._2)).map(i => end - due(i.toInt))
     }
     val lat = perBatch.flatten
-    val p90 = Stats.percentile(lat, 90)
-    val beyond = perBatch.count(_.exists(_ > p90))
+    val p95 = Stats.percentile(lat, 95)
+    val beyond = perBatch.count(_.exists(_ > p95))
 
     val (attempted, failures, tableRows) = check(spec.name, events, rec, table, spark)
     RoundResult(setupMs, startMs, lat, beyond, backlog / drainSec, attempted, failures, progress,
-      openRange, late.toSeq, tableRows, rec.replayed, heapMb)
+      openRange, late.toSeq, tableRows, rec.replayed, heapMb, query.runId.toString)
   }
 
   // -- output checks (outside every timed span) -------------------------
@@ -321,8 +335,9 @@ object Streams {
   def check(workload: String, events: Events, rec: Received, table: Option[UpsertParquetSink],
       spark: SparkSession): (Long, Seq[String], Long) = workload match {
     case "wordcount" =>
-      val expected = events.content.iterator.flatMap(_.split(" ")).toSeq.groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }
-      (expected.size.toLong, checkCounts(expected, rec.counts), 0L)
+      val expected = mutable.HashMap[String, Long]()
+      events.content.foreach(_.split(" ").foreach(w => expected(w) = expected.getOrElse(w, 0L) + 1))
+      (expected.size.toLong, checkCounts(expected.toMap, rec.counts), 0L)
     case "upsert" =>
       val expected = events.group.zip(events.content).toMap // later writes overwrite earlier ones
       import spark.implicits._

@@ -4,7 +4,10 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.pipeline.Instrumentation
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -77,35 +80,33 @@ final class Tracer(val enabled: Boolean) {
   }
 }
 
-/** Spark's public scheduler events, summed for the per-layer metrics
-  * and recorded as spans (stages) for the driver-gap split. The job
-  * group set by the caller (`SparkContext.setJobGroup`) names the trace
-  * a stage belongs to. */
-final class SchedulerProbe(tracer: Tracer, cores: Int) extends SparkListener {
-  private val stageGroup = scala.collection.concurrent.TrieMap[Int, String]()
-  val jobs = new AtomicLong
-  private val jobsEnded = new AtomicLong
-  val stages = new AtomicLong
-  val tasks = new AtomicLong
-  val failedTasks = new AtomicLong
-  val taskRunMs = new AtomicLong
-  val taskCpuNs = new AtomicLong
-  val gcMs = new AtomicLong
-  val shuffleWrite = new AtomicLong
-  val shuffleRead = new AtomicLong
-  val spillDisk = new AtomicLong
-  val spillMemory = new AtomicLong
-  val recordsWritten = new AtomicLong
+/** Scheduler and task totals of the stages a run measured. */
+final case class SchedTotals(
+    jobs: Long, stages: Long, tasks: Long, failedTasks: Long, taskRunMs: Long, taskCpuNs: Long, gcMs: Long,
+    shuffleWrite: Long, shuffleRead: Long, spillDisk: Long, spillMemory: Long, recordsWritten: Long)
 
-  /** Jobs per job-group prefix (the part before ':'). */
-  val jobsByKind = scala.collection.concurrent.TrieMap[String, Long]()
+/** Spark's public scheduler events, kept per job and per stage and
+  * recorded as spans (stages) for the driver-gap split. The job group
+  * (`SparkContext.setJobGroup`; a streaming query's run id) names the
+  * trace a stage belongs to, so the totals can leave out jobs that are
+  * not the measured work: warm-up, output checks, other rounds. */
+final class SchedulerProbe(tracer: Tracer) extends SparkListener {
+  private final class StageSums {
+    val tasks, failedTasks, runMs, cpuNs, gcMs, shuffleWrite, shuffleRead, spillDisk, spillMemory,
+      recordsWritten = new AtomicLong
+  }
+  private val stageGroup = scala.collection.concurrent.TrieMap[Int, String]()
+  /** Job id -> (job group, submission epoch ms). */
+  private val jobStarts = scala.collection.concurrent.TrieMap[Int, (String, Double)]()
+  /** Completed stage id -> submission epoch ms. */
+  private val stageSubmitted = scala.collection.concurrent.TrieMap[Int, Double]()
+  private val perStage = scala.collection.concurrent.TrieMap[Int, StageSums]()
+  private val jobsEnded = new AtomicLong
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
-    jobs.incrementAndGet()
     val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
     e.stageIds.foreach(stageGroup(_) = g)
-    val kind = g.takeWhile(_ != ':')
-    jobsByKind.synchronized(jobsByKind(kind) = jobsByKind.getOrElse(kind, 0L) + 1)
+    jobStarts(e.jobId) = (g, e.time.toDouble)
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = jobsEnded.incrementAndGet()
@@ -114,34 +115,78 @@ final class SchedulerProbe(tracer: Tracer, cores: Int) extends SparkListener {
     * started so far (stage and task events precede it). */
   def awaitQuiet(timeoutMs: Long = 10000): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
-    while (jobsEnded.get < jobs.get && System.currentTimeMillis() < deadline) Thread.sleep(5)
+    while (jobsEnded.get < jobStarts.size && System.currentTimeMillis() < deadline) Thread.sleep(5)
   }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-    stages.incrementAndGet()
     val i = e.stageInfo
-    for (s <- i.submissionTime; c <- i.completionTime)
+    for (s <- i.submissionTime; c <- i.completionTime) {
+      stageSubmitted(i.stageId) = s.toDouble
       tracer.observed("stage", stageGroup.getOrElse(i.stageId, ""), s.toDouble, c.toDouble)
-  }
-
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-    tasks.incrementAndGet()
-    if (e.taskInfo != null && e.taskInfo.failed) failedTasks.incrementAndGet()
-    val m = e.taskMetrics
-    if (m != null) {
-      taskRunMs.addAndGet(m.executorRunTime)
-      taskCpuNs.addAndGet(m.executorCpuTime)
-      gcMs.addAndGet(m.jvmGCTime)
-      shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      spillDisk.addAndGet(m.diskBytesSpilled)
-      spillMemory.addAndGet(m.memoryBytesSpilled)
-      recordsWritten.addAndGet(m.outputMetrics.recordsWritten)
     }
   }
 
-  /** Busy share of the executor cores over `wallMs`. */
-  def utilization(wallMs: Double): Double = taskRunMs.get / math.max(1.0, wallMs * cores)
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+    val st = perStage.getOrElseUpdate(e.stageId, new StageSums)
+    st.tasks.incrementAndGet()
+    if (e.taskInfo != null && e.taskInfo.failed) st.failedTasks.incrementAndGet()
+    val m = e.taskMetrics
+    if (m != null) {
+      st.runMs.addAndGet(m.executorRunTime)
+      st.cpuNs.addAndGet(m.executorCpuTime)
+      st.gcMs.addAndGet(m.jvmGCTime)
+      st.shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      st.shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+      st.spillDisk.addAndGet(m.diskBytesSpilled)
+      st.spillMemory.addAndGet(m.memoryBytesSpilled)
+      st.recordsWritten.addAndGet(m.outputMetrics.recordsWritten)
+    }
+  }
+
+  /** Totals over the jobs and stages `keep` selects by job group and
+    * submission time (epoch ms). */
+  def totals(keep: (String, Double) => Boolean): SchedTotals = {
+    val jobs = jobStarts.values.count { case (g, t) => keep(g, t) }
+    val stages = stageSubmitted.collect { case (id, t) if keep(stageGroup.getOrElse(id, ""), t) => id }.toSeq
+    val sums = stages.flatMap(perStage.get)
+    def sum(f: StageSums => AtomicLong) = sums.map(f(_).get).sum
+    SchedTotals(jobs.toLong, stages.size.toLong, sum(_.tasks), sum(_.failedTasks), sum(_.runMs), sum(_.cpuNs),
+      sum(_.gcMs), sum(_.shuffleWrite), sum(_.shuffleRead), sum(_.spillDisk), sum(_.spillMemory),
+      sum(_.recordsWritten))
+  }
+}
+
+/** The measured work of a run: its wall-clock windows, the code the
+  * JVM compiled inside them and the library's instrumentation counts
+  * (traced run only). Set-up, warm-up, output checks and the
+  * single-core baseline fall outside every window. */
+final class Measured(tracer: Tracer) {
+  val instr = new CountingInstrumentation
+  private val ws = ArrayBuffer[(Double, Double)]()
+  var compiles = 0L
+  var compileNs = 0L
+
+  def apply[T](body: => T): T =
+    if (!tracer.enabled) body
+    else {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val n0 = CodeGenerator.compileTime
+      Instrumentation.install(instr)
+      val s = tracer.nowMs
+      try body
+      finally {
+        val e = tracer.nowMs
+        Instrumentation.uninstall()
+        compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        compileNs += CodeGenerator.compileTime - n0
+        ws.synchronized(ws += ((s, e)))
+      }
+    }
+
+  def windows: Seq[(Double, Double)] = ws.synchronized(ws.toVector)
+  def wallMs: Double = windows.map { case (s, e) => e - s }.sum
+  /** Whether `ms` falls in a window, with 1 ms for clock rounding. */
+  def covers(ms: Double): Boolean = windows.exists { case (s, e) => ms >= s - 1 && ms <= e + 1 }
 }
 
 /** Catalyst's planning phases of every executed query, from the

@@ -45,7 +45,8 @@ class ChecksSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ok = GraftQuery("p1_ok", (s, _) => s.range(100).selectExpr("id", "id % 7 AS m"), None)
     val boom = GraftQuery("p2_boom", (_, _) => throw new IllegalStateException("planted"), None)
     val off = GraftQuery("p3_off", (s, _) => s.range(10).toDF("id"), None)
-    val outcomes = Registry.run(spark, "unused", Seq(ok, boom, off), new Tracer(false))
+    val untraced = new Tracer(false)
+    val outcomes = Registry.run(spark, "unused", Seq(ok, boom, off), untraced, new Measured(untraced))
     assert(outcomes.map(_.name) == Seq("p1_ok", "p2_boom", "p3_off"))
     assert(outcomes(1).error.exists(_.contains("planted")))
     assert(outcomes(1).wallMs.isNaN)
@@ -66,16 +67,41 @@ class ChecksSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Registry.digest(a) != Registry.digest(c))
   }
 
-  test("each stream workload's round passes its own check at a small size") {
-    val probe = new ProgressProbe
-    spark.streams.addListener(probe)
-    Seq("wordcount", "upsert").foreach { w =>
+  private lazy val probe = {
+    val p = new ProgressProbe
+    spark.streams.addListener(p)
+    p
+  }
+
+  Seq("wordcount", "upsert").foreach { w =>
+    test(s"a small $w round passes its own check") {
       val spec = Streams.Specs(w)
+      val untraced = new Tracer(false)
       val rr = Streams.round(spark, spec, 7L, 0, 0L, 300L, 2 * spec.maxPerTrigger, s"$work/streams", 2,
-        new Tracer(false), probe)
-      assert(rr.failures.isEmpty, s"$w: ${rr.failures.take(3)}")
+        untraced, probe, new Measured(untraced))
+      if (rr.failures.nonEmpty) fail(s"$w: ${rr.failures.size} failed outputs, e.g. ${rr.failures.take(3)}")
       assert(rr.attempted > 0 && rr.latenciesMs.nonEmpty && rr.drainMsgsPerSec > 0, w)
     }
+  }
+
+  test("scheduler totals count only the kept job groups inside a measured window") {
+    val tracer = new Tracer(true)
+    val sched = new SchedulerProbe(tracer)
+    val measured = new Measured(tracer)
+    val sc = spark.sparkContext
+    sc.addSparkListener(sched)
+    try {
+      sc.setJobGroup("exec:q", "q")
+      sc.parallelize(1 to 10, 2).count() // outside every window
+      measured {
+        sc.parallelize(1 to 10, 3).count()
+        sc.setJobGroup("check:q", "q")
+        sc.parallelize(1 to 10, 4).count() // another group
+      }
+      sc.clearJobGroup()
+      val t = Main.totals(sched, measured, _.startsWith("exec:"))
+      assert((t.jobs, t.stages, t.tasks) == ((1L, 1L, 3L)))
+    } finally sc.removeSparkListener(sched)
   }
 
   test("percentiles interpolate and interval unions merge overlaps") {
