@@ -27,16 +27,21 @@ object SessionTuning {
     * Default 256 MiB / 1 KiB = 262144 entries — numerically identical to
     * the constant it replaces, so local bench numbers are unaffected; the
     * floor of 128 is Spark's own legacy default (never derive BELOW the
-    * stock behavior).
+    * stock behavior), and the ceiling is `Int.MaxValue` because Spark's
+    * conf is an Int. A malformed variable fails naming the variable.
     */
-  def objectHashFallbackEntries: Long =
+  def objectHashFallbackEntries: Int =
     objectHashFallbackEntries(
-      sys.env.get("SPARK_GRAFT_AGG_TASK_BYTES").map(_.trim.toLong)
-        .getOrElse(256L << 20),
-      sys.env.get("SPARK_GRAFT_AGG_MAX_KEY_BYTES").map(_.trim.toLong)
-        .getOrElse(1024L))
+      envBytes("SPARK_GRAFT_AGG_TASK_BYTES", 256L << 20),
+      envBytes("SPARK_GRAFT_AGG_MAX_KEY_BYTES", 1024L))
 
   /** The derivation itself, parameterised for tests. */
-  def objectHashFallbackEntries(targetTaskBytes: Long, maxKeyBytes: Long): Long =
-    math.max(128L, targetTaskBytes / math.max(1L, maxKeyBytes))
+  def objectHashFallbackEntries(targetTaskBytes: Long, maxKeyBytes: Long): Int =
+    math.min(Int.MaxValue.toLong, math.max(128L, targetTaskBytes / math.max(1L, maxKeyBytes))).toInt
+
+  private[graft] def envBytes(name: String, default: Long, env: Map[String, String] = sys.env): Long =
+    env.get(name).fold(default) { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$name must be a whole number of bytes, got '$v'"))
+    }
 }

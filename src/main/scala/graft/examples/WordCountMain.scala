@@ -8,7 +8,9 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** Runnable word-count topology — the Spark twin of the reference's
   * `examples/word_count.py` / `tests/sample_pipeline.py` demo: ramp →
-  * split intersection (HashRing on word) → stateful count → sink,
+  * split intersection (its HashRing input routes sentences, which carry
+  * no groupingValue, so all go to one partition) → stateful count keyed
+  * by word → sink,
   * with dead-letter stream and controller-style stats printed at the
   * end. `sbt "runMain graft.examples.WordCountMain"`.
   */

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import scala.collection.mutable
@@ -144,9 +145,13 @@ final class Pipeline(val spark: SparkSession) {
     this
   }
 
-  /** ≙ `Pipeline.run()` — start one streaming query per sink. */
+  /** ≙ `Pipeline.run()` — start one streaming query per sink. Local
+    * checkpoints are written through
+    * [[graft.streaming.LocalCheckpointFileManager]] unless the session
+    * already names a checkpoint file manager. */
   def run(trigger: Trigger = Trigger.ProcessingTime(0L)): PipelineRun = {
     require(sinks.nonEmpty, "no sinks attached")
+    LocalCheckpointFileManager.install(spark)
     val queries = sinks.map { s =>
       s.sink.start(streams(s.inStream), s.queryName, trigger)
     }.toSeq

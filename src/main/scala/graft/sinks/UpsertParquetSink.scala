@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max_by, monotonically_increasing_id, struct}
 
 /** Keyed upsert into a parquet-backed table — the Spark port of the
   * reference's batch DB upsert (`contrib/sql_alchemy/intersections.py:
@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions.col
 final class UpsertParquetSink(tablePath: String, keyCols: Seq[String]) extends Serializable {
   require(keyCols.nonEmpty, "upsert requires at least one key column")
 
-  /** `foreachBatch` callback. Latest row per key within the batch wins
-    * (dedup before merge), mirroring last-write-wins in the reference's
-    * UPDATE loop.
+  /** `foreachBatch` callback. The batch's last row per key in delivered
+    * order wins (dedup before merge), mirroring last-write-wins in the
+    * reference's UPDATE loop.
     *
     * Batch-id idempotence: a replayed micro-batch (restart between sink
     * write and offset commit) is skipped by comparing against the last
@@ -40,7 +40,7 @@ final class UpsertParquetSink(tablePath: String, keyCols: Seq[String]) extends S
       val last = try new String(in.readAllBytes()).trim.toLong finally in.close()
       if (batchId <= last) return // replayed batch — already applied
     }
-    val deduped = batch.dropDuplicates(keyCols)
+    val deduped = lastPerKey(batch)
     val cur = new Path(tablePath)
     val merged =
       if (fs.exists(cur)) {
@@ -60,6 +60,15 @@ final class UpsertParquetSink(tablePath: String, keyCols: Seq[String]) extends S
     val out = fs.create(marker, true)
     try out.write(batchId.toString.getBytes) finally out.close()
   }
+
+  /** One row per key: the one delivered last. `monotonically_increasing_id`
+    * numbers the rows in delivered order (partition, then position) before
+    * any shuffle, and `max_by` keeps each key's highest-numbered row. */
+  private def lastPerKey(batch: DataFrame): DataFrame =
+    batch.withColumn("__upsert_seq", monotonically_increasing_id())
+      .groupBy(keyCols.map(col): _*)
+      .agg(max_by(struct(batch.columns.map(batch.col).toSeq: _*), col("__upsert_seq")).as("__upsert_last"))
+      .select("__upsert_last.*")
 
   def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.read.parquet(tablePath)

@@ -101,10 +101,12 @@ final class LiveClusterIndex(maxNodes: Long = LiveClusterIndex.DefaultMaxNodes) 
 
   /** Attach to a streaming pair relation: every micro-batch folds in.
     * A bound overflow inside [[merge]] fails this query loudly. */
-  def attach(pairs: DataFrame, queryName: String = "live_cluster_index") =
+  def attach(pairs: DataFrame, queryName: String = "live_cluster_index") = {
+    LocalCheckpointFileManager.install(pairs.sparkSession)
     pairs.writeStream.queryName(queryName)
       .foreachBatch((df: DataFrame, _: Long) => merge(df))
       .start()
+  }
 }
 
 object LiveClusterIndex {
@@ -205,8 +207,10 @@ final class ShardedClusterIndex(shards: Int,
 
   /** Attach to a streaming pair relation: every micro-batch folds in.
     * A per-shard bound overflow fails this query loudly. */
-  def attach(pairs: DataFrame, queryName: String = "sharded_cluster_index") =
+  def attach(pairs: DataFrame, queryName: String = "sharded_cluster_index") = {
+    LocalCheckpointFileManager.install(pairs.sparkSession)
     pairs.writeStream.queryName(queryName)
       .foreachBatch((df: DataFrame, _: Long) => merge(df))
       .start()
+  }
 }

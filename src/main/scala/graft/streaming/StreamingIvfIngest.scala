@@ -101,10 +101,12 @@ final class StreamingIvfIngest(
   }
 
   /** Start the maintenance stream over (vec_id, v) vectors. */
-  def start(vecs: Dataset[(Long, Seq[Double])], queryName: String): StreamingQuery =
+  def start(vecs: Dataset[(Long, Seq[Double])], queryName: String): StreamingQuery = {
+    LocalCheckpointFileManager.install(vecs.sparkSession)
     vecs.toDF("vec_id", "v").writeStream
       .queryName(queryName)
       .trigger(Trigger.ProcessingTime(0))
       .foreachBatch((df: DataFrame, id: Long) => ingest(df, id))
       .start()
+  }
 }

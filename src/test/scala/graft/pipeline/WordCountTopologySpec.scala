@@ -27,7 +27,9 @@ class WordCountTopologySpec extends SparkSpecBase {
 
   object SplitIntersection extends Intersection[String, String] {
     // ≙ SentenceSplitIntersection (`tests/sample_pipeline.py:41-45`):
-    // one message per token, re-keyed by word for the HashRing edge.
+    // one message per token, keyed by word (groupingValue) for the
+    // stateful count. The HashRing grouping on this intersection routes
+    // its input sentences, which carry no groupingValue.
     def process(m: Message[String]): Iterator[Message[String]] =
       m.content.split(" ").iterator.map(w => m.spinOff(w, Some(w)))
   }

@@ -36,6 +36,20 @@ class SinksSpec extends SparkSpecBase {
     val sink = new UpsertParquetSink(dir, Seq("k"))
     sink.write(Seq((1, "a"), (1, "b"), (2, "c")).toDF("k", "v"), 0L)
     assert(sink.read(spark).count() == 2)
+    assert(sink.read(spark).as[(Int, String)].collect().toMap == Map(1 -> "b", 2 -> "c"))
+  }
+
+  test("upsert sink keeps each key's last row in delivered order across partitions") {
+    val dir = java.nio.file.Files.createTempDirectory("upsert-order").toString + "/tbl"
+    val sink = new UpsertParquetSink(dir, Seq("k"))
+    sink.write(Seq((0L, -1L)).toDF("k", "v"), 0L)
+    // 8 partitions of ids in order; every key repeats 100 times, and its
+    // last delivered row is its largest id
+    val batch = spark.range(0L, 1000L, 1L, 8).selectExpr("id % 10 AS k", "id AS v")
+    sink.write(batch, 1L)
+    val got = sink.read(spark).as[(Long, Long)].collect().toMap
+    assert(got == (0L until 10L).map(k => k -> (990L + k)).toMap)
+    assert(sink.read(spark).columns.toSeq == Seq("k", "v"))
   }
 
   test("upsert sink works as a streaming foreachBatch sink") {
