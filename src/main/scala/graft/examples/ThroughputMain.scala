@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming-throughput stress — the number the batch bench can't give:
   * messages/second end-to-end through the word-count topology (ramp →
-  * split intersection → HashRing exchange → stateful count → sink),
+  * split intersection → word-key exchange → stateful count → sink),
   * the reference's canonical pipeline. Reference context for the same
   * shape (all public constants, no published benchmark exists): one
   * CPython process interprets each message in a `process()` generator

@@ -8,11 +8,10 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** Runnable word-count topology — the Spark twin of the reference's
   * `examples/word_count.py` / `tests/sample_pipeline.py` demo: ramp →
-  * split intersection (its HashRing input routes sentences, which carry
-  * no groupingValue, so all go to one partition) → stateful count keyed
-  * by word → sink,
-  * with dead-letter stream and controller-style stats printed at the
-  * end. `sbt "runMain graft.examples.WordCountMain"`.
+  * split intersection (run on the ramp's own partitions: HashRing adds no
+  * exchange in front of a per-message operator) → stateful count keyed
+  * by word → sink, with dead-letter stream and controller-style stats
+  * printed at the end. `sbt "runMain graft.examples.WordCountMain"`.
   */
 object WordCountMain {
   def main(args: Array[String]): Unit = {

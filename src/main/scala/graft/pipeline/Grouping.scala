@@ -13,19 +13,21 @@ import org.apache.spark.sql.functions.col
   * (same key ⇒ same partition ⇒ same state store) without vnode rings —
   * and AQE is free to coalesce partitions at runtime.
   *
-  * A grouping routes an intersection's INPUT: `addIntersection(in, out,
-  * op, g)` partitions stream `in` by `g` before `op` runs, as the
-  * reference's grouper sits in front of the consuming intersection. It
-  * does not partition `op`'s output; a downstream keyed stage
-  * ([[Pipeline.addStatefulIntersection]]) shuffles by its own key.
+  * A grouping routes an intersection's INPUT, as the reference's grouper
+  * sits in front of the consuming intersection, and only where the
+  * consumer can observe placement. It does not partition the operator's
+  * output; a downstream keyed stage ([[Pipeline.addStatefulIntersection]])
+  * shuffles by its own key.
   */
 sealed trait Grouping
 
 object Grouping {
   /** `HashRingGrouper` (`grouping.py:20-35`): key-partitioned routing on
-    * the input messages' `groupingValue`. Messages without one (e.g.
-    * ramp output that was never keyed) all carry null and so all hash to
-    * ONE partition: the consuming intersection then runs serially. */
+    * the input messages' `groupingValue`, for a consumer that can see
+    * placement: [[Pipeline.addBatchIntersection]] draws each chunk from
+    * one partition. [[Pipeline.addIntersection]] keeps the upstream
+    * partitioning, as [[Random]] does (`process` depends only on its
+    * message), and coalesces instead when routing into one partition. */
   case object HashRing extends Grouping
 
   /** `RandomGrouper` (`grouping.py:38-43`, the default): load-balanced;

@@ -12,6 +12,11 @@ package graft.pipeline
   * poison-message mitigation of SURVEY.md §7.4: the reference replays
   * individual messages from the ramp; Spark would replay the whole
   * micro-batch forever.
+  *
+  * `process` must depend only on its message, not on which messages
+  * share its task or instance (an `object` is one instance per JVM):
+  * the pipeline places messages freely. Keyed state belongs in a
+  * [[StatefulIntersection]], whose stage shuffles by its own key.
   */
 trait Intersection[I, O] extends Serializable {
   def process(m: Message[I]): Iterator[Message[O]]

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import scala.collection.mutable
 
@@ -49,17 +50,18 @@ final class Pipeline(val spark: SparkSession) {
   def addIntersection[I, O](
       inStream: String, outStream: String, op: Intersection[I, O],
       grouping: Grouping = Grouping.Random, partitions: Int = 0)(
-      implicit oe: Encoder[Message[O]], de: Encoder[DeadLetter],
-      se: Encoder[SafeResult[O]]): Pipeline = {
-    val in = Grouping(grouping, stream[I](inStream), partitions)
-    val routed = in.map { m =>
-      Intersection.safeProcess(op, m) match {
-        case Right(ms) => SafeResult(ms, None)
-        case Left(dl)  => SafeResult(Seq.empty[Message[O]], Some(dl))
-      }
+      implicit oe: Encoder[Message[O]], de: Encoder[DeadLetter]): Pipeline = {
+    val src = stream[I](inStream)
+    val n = if (partitions > 0) partitions else spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt
+    // process depends only on its message (see Intersection), so a hash exchange buys nothing;
+    // into one partition, coalesce places messages as that hash would, with no shuffle
+    val in = grouping match {
+      case Grouping.HashRing if n == 1 => src.coalesce(1)
+      case Grouping.HashRing => Grouping(Grouping.Random, src, partitions)
+      case g => Grouping(g, src, partitions)
     }
-    streams(outStream) = routed.flatMap(_.ok)
-    deadLetterSources += routed.flatMap(_.err)
+    streams(outStream) = in.flatMap(m => Intersection.safeProcess(op, m).getOrElse(Seq.empty))
+    deadLetterSources += in.flatMap(m => Intersection.safeProcess(op, m).swap.toOption)
     this
   }
 
@@ -164,9 +166,6 @@ object Pipeline {
   def apply(spark: SparkSession): Pipeline = new Pipeline(spark)
   private[pipeline] final case class SinkDef(inStream: String, sink: StreamSink, queryName: String)
 }
-
-/** Encodable per-message outcome of a safe `process` call. */
-final case class SafeResult[O](ok: Seq[Message[O]], err: Option[DeadLetter])
 
 /** Handle over the started topology (≙ the supervised process group). */
 final case class PipelineRun(queries: Seq[StreamingQuery]) {

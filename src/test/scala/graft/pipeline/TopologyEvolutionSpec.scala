@@ -3,7 +3,10 @@ package graft.pipeline
 import java.util.concurrent.ConcurrentHashMap
 
 import graft.SparkSpecBase
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.CoalesceExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Motorway's headline claim is hot-swappable topology evolution
@@ -107,6 +110,95 @@ class TopologyEvolutionSpec extends SparkSpecBase {
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     assert(got == expectedAll,
       s"diverged after evolution: ${got.toSet.diff(expectedAll.toSet).take(5)} vs ${expectedAll.toSet.diff(got.toSet).take(5)}")
+  }
+
+  test("restart across the HashRing routing change: the old hash-shuffled plan's checkpoint resumes exactly") {
+    val ckpt = java.nio.file.Files.createTempDirectory("topo_route").toString + "/ckpt"
+    val input = MemoryStream[Message[String]](spark, 2)
+    val table = new ConcurrentHashMap[String, Long]()
+    def sink() = StreamSink.ForeachBatch({ (df, _) =>
+      df.selectExpr("content._1", "content._2").as[(String, Long)]
+        .collect().foreach { case (w, c) => table.put(w, c) }
+    }, OutputMode.Update, Some(ckpt))
+
+    // generation 1: the earlier wiring, which hash-shuffled the split's
+    // input on groupingValue before a HashRing intersection
+    val run1 = Pipeline(spark)
+      .addRamp("sentence", input.toDS())
+      .addRelational[String, Message[String]]("sentence", "keyed")(_.repartition(col("groupingValue")))
+      .addIntersection("keyed", "word", SplitIntersection)
+      .addStatefulIntersection("word", "counts", CountIntersection)
+      .addSink("counts", sink(), "route_wc")
+      .run()
+    input.addData(firstHalf.zipWithIndex.map { case (s, i) => Message(i.toString, s) })
+    run1.processAllAvailable()
+    run1.stop()
+
+    // generation 2: same checkpoint, HashRing routed in place
+    val run2 = Pipeline(spark)
+      .addRamp("sentence", input.toDS())
+      .addIntersection("sentence", "word", SplitIntersection, Grouping.HashRing)
+      .addStatefulIntersection("word", "counts", CountIntersection)
+      .addSink("counts", sink(), "route_wc")
+      .run()
+    input.addData(secondHalf.zipWithIndex.map { case (s, i) => Message((100 + i).toString, s) })
+    run2.processAllAvailable()
+    val readByRun2 = run2.queries.head.recentProgress.map(_.numInputRows).sum
+    run2.stop()
+
+    assert(readByRun2 == secondHalf.size, s"the restarted query read $readByRun2 sentences")
+    val got = Map.from(scala.jdk.CollectionConverters.MapHasAsScala(table).asScala)
+    val expectedAll = (firstHalf ++ secondHalf).flatMap(_.split(" "))
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    assert(got == expectedAll,
+      s"diverged after the routing change: ${got.toSet.diff(expectedAll.toSet).take(5)} vs ${expectedAll.toSet.diff(got.toSet).take(5)}")
+  }
+
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, before)
+  }
+
+  test("HashRing's one-partition routing resumes exactly when the shuffle partition count changes across a restart") {
+    val ckpt = java.nio.file.Files.createTempDirectory("topo_parts").toString + "/ckpt"
+    val input = MemoryStream[Message[String]](spark, 2)
+    val table = new ConcurrentHashMap[String, Long]()
+    def start() = Pipeline(spark)
+      .addRamp("sentence", input.toDS())
+      .addIntersection("sentence", "word", SplitIntersection, Grouping.HashRing)
+      .addStatefulIntersection("word", "counts", CountIntersection)
+      .addSink("counts", StreamSink.ForeachBatch({ (df, _) =>
+        df.selectExpr("content._1", "content._2").as[(String, Long)]
+          .collect().foreach { case (w, c) => table.put(w, c) }
+      }, OutputMode.Update, Some(ckpt)), "parts_wc")
+      .run()
+
+    // generation 1 on four shuffle partitions: the count's state has four
+    val run1 = withShufflePartitions(4)(start())
+    input.addData(firstHalf.zipWithIndex.map { case (s, i) => Message(i.toString, s) })
+    run1.processAllAvailable()
+    run1.stop()
+
+    // generation 2 on one: the split's input is coalesced to one
+    // partition, while the checkpoint still pins the state to four
+    val run2 = withShufflePartitions(1)(start())
+    input.addData(secondHalf.zipWithIndex.map { case (s, i) => Message((100 + i).toString, s) })
+    run2.processAllAvailable()
+    val readByRun2 = run2.queries.head.recentProgress.map(_.numInputRows).sum
+    val plan2 = run2.queries.head.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    run2.stop()
+
+    assert(plan2.collect { case c: CoalesceExec => c.numPartitions } == Seq(1), s"expected one coalesce:\n$plan2")
+    assert(plan2.collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions } == Seq(4),
+      s"expected one 4-way exchange into the restored state:\n$plan2")
+    assert(readByRun2 == secondHalf.size, s"the restarted query read $readByRun2 sentences")
+    val got = Map.from(scala.jdk.CollectionConverters.MapHasAsScala(table).asScala)
+    val expectedAll = (firstHalf ++ secondHalf).flatMap(_.split(" "))
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    assert(got == expectedAll,
+      s"diverged across the partition change: ${got.toSet.diff(expectedAll.toSet).take(5)} vs ${expectedAll.toSet.diff(got.toSet).take(5)}")
   }
 
   test("a changed state schema is rejected loudly at restart, never decoded as garbage") {

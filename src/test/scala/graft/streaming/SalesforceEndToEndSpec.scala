@@ -87,7 +87,8 @@ class SalesforceEndToEndSpec extends SparkSpecBase {
         .as[(String, String, Option[String])]
         .map { case (id, c, g) => Message(id, c, g) }
 
-      // topology: route by sobject Id (HashRing ≙ same-key-same-task)
+      // topology: key by sobject Id (HashRing on a per-message
+      // intersection keeps the ramp's partitioning; the sink orders by Id)
       val route = Intersection[String, String]("RouteById") { m =>
         Iterator.single(m.spinOff(m.content, Some(m.id)))
       }
