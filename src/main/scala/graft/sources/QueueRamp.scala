@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, ArrayDeque, HashMap}
 
 /** Driver-side message queues backing [[QueueRampProvider]] — the Ramp
   * contract of the reference (`motorway/ramp.py:15-170`):
@@ -12,19 +12,41 @@ import scala.collection.mutable.ArrayBuffer
   * `contrib/kafka/ramps.py:180-198`, and the SQS ramp deletes messages,
   * `contrib/amazon_sqs/ramps.py:28-31`).
   *
-  * Local/test transport: a process-global registry (valid in local[*];
-  * a production source would read the external system from the executor
-  * side — this class is the harness proving the offset/commit plumbing).
+  * The buffer behind every polling connector ([[PollingRamp]],
+  * [[CometDRamp]], [[RecurlyRamp]], [[KinesisShardConsumer]],
+  * [[SqsPoller]]): a process-global registry, valid in local[*].
+  *
+  * Release rule: each [[QueueRampStream]] holds its queue at the offset
+  * it has committed, and the queue's committed offset is the minimum
+  * over the holds (with none, [[commitUpTo]] sets it directly). A hold
+  * belongs to the reading query's checkpoint, not to one run of it: a
+  * stopped query keeps its hold while its checkpoint exists, and a
+  * restart from that checkpoint takes it back. [[onCommit]] hooks fire
+  * for each newly committed range, and only then are the entries below
+  * it dropped, so a queue holds just the messages some reader has not
+  * committed. Offsets stay absolute; reading one that was released
+  * throws.
   */
 object QueueRamp {
   final case class Entry(id: String, content: String, groupingValue: String, eventTimeMicros: Long)
 
-  private final class Q {
-    val entries = new ArrayBuffer[Entry]()
-    val acked = new ArrayBuffer[Entry]()
+  private[sources] final class Q {
+    val entries = new ArrayDeque[Entry]()
+    var base: Long = 0L // absolute offset of entries.head
     var committed: Long = 0L
     var draining: Boolean = false // see markDrainable
+    val holds = HashMap[String, Hold]() // reader id → its hold
+    val commitLock = new Object // serializes hooks and release, not enqueue
+    def size: Long = base + entries.size
   }
+
+  /** A stream's identity on its queue. `id` survives a restart of its
+    * query (the query's checkpoint location); `resumable` says whether
+    * such a restart can still happen once the stream has stopped. */
+  private[sources] final class Reader(val name: String, val id: String, val resumable: () => Boolean)
+
+  /** What one reader has committed; `live` until its stream stops. */
+  private[sources] final class Hold(val reader: Reader, var pos: Long) { var live = true }
 
   private val queues = new ConcurrentHashMap[String, Q]()
 
@@ -59,25 +81,35 @@ object QueueRamp {
     * offset→external-id mapping, which would let checkpoints publish
     * sequences whose offsets were never committed. */
   def enqueue(name: String, msgs: Seq[Entry]): Long = q(name).synchronized {
-    val start = q(name).entries.size.toLong
+    val start = q(name).size
     q(name).entries ++= msgs
     start
   }
 
-  def size(name: String): Long = q(name).synchronized(q(name).entries.size.toLong)
+  def size(name: String): Long = q(name).synchronized(q(name).size)
 
-  def slice(name: String, from: Long, until: Long): Seq[Entry] = q(name).synchronized {
-    q(name).entries.slice(from.toInt, until.toInt).toSeq
+  /** Entries at absolute offsets [from, until), clamped to the queue's
+    * end. Throws when `from` lies below the released prefix. */
+  def slice(name: String, from: Long, until: Long): Seq[Entry] = {
+    val qu = q(name)
+    qu.synchronized {
+      if (from < qu.base)
+        throw new IllegalStateException(s"queue '$name': offset $from was released " +
+          s"(base ${qu.base}); every reader hold had committed it")
+      val lo = (math.min(from, qu.size) - qu.base).toInt
+      val hi = (math.min(math.max(until, from), qu.size) - qu.base).toInt
+      qu.entries.view.slice(lo, hi).toVector
+    }
   }
 
   private val commitHooks =
     new ConcurrentHashMap[String, ArrayBuffer[(Long, Long) => Unit]]()
 
-  /** Register a success callback fired inside [[commitUpTo]] with the
-    * newly committed offset range [from, until) — the seam where an
-    * external-system ack happens at exactly engine-commit time (≙ the
-    * SQS ramp deleting messages in `success()`,
-    * `contrib/amazon_sqs/ramps.py:28-31`). Hooks must not throw. */
+  /** Register a success callback fired with each newly committed offset
+    * range [from, until) — the seam where an external-system ack happens
+    * at exactly engine-commit time (≙ the SQS ramp deleting messages in
+    * `success()`, `contrib/amazon_sqs/ramps.py:28-31`). The range is
+    * still readable with [[slice]] inside the hook. Hooks must not throw. */
   def onCommit(name: String)(hook: (Long, Long) => Unit): Unit = {
     // loop: a concurrent drop() can remove the buffer between the
     // computeIfAbsent and the append — re-fetch until the buffer we
@@ -91,18 +123,49 @@ object QueueRamp {
     }
   }
 
-  /** Engine-driven success callback: everything below `upTo` is acked —
-    * a real ramp would delete/commit in the external system here (and
-    * registered [[onCommit]] hooks do exactly that). */
-  def commitUpTo(name: String, upTo: Long): Unit = {
-    val range = q(name).synchronized {
-      val qu = q(name)
-      if (upTo > qu.committed) {
-        val from = qu.committed
-        qu.acked ++= qu.entries.slice(qu.committed.toInt, upTo.toInt)
-        qu.committed = upTo
-        Some((from, upTo))
-      } else None
+  /** Everything below `upTo` is acked, for a queue no stream reads: the
+    * seam for consumers that play the engine. A read queue takes its
+    * commits from its readers' holds only, so this throws while one is held. */
+  def commitUpTo(name: String, upTo: Long): Unit = advance(name, q(name)) { qu =>
+    if (lowestHold(qu).nonEmpty)
+      throw new IllegalStateException(s"queue '$name' has ${qu.holds.size} reader " +
+        "hold(s); its commits come from them")
+    upTo
+  }
+
+  /** Register a reader. A new one holds the queue at its committed
+    * offset; a restarted one takes back the hold it left. */
+  private[sources] def register(r: Reader): Unit = {
+    val qu = q(r.name)
+    qu.synchronized(qu.holds.getOrElseUpdate(r.id, new Hold(r, qu.committed)).live = true)
+  }
+
+  /** A stopped reader keeps its hold while it is `resumable`, so a
+    * restart from its checkpoint still finds what it has not committed. */
+  private[sources] def stopReader(r: Reader): Unit =
+    Option(queues.get(r.name)).foreach(qu => qu.synchronized(qu.holds.get(r.id).foreach(_.live = false)))
+
+  /** Engine-driven success callback for one reader: the queue commits up
+    * to the lowest offset every hold has committed. */
+  private[sources] def commit(r: Reader, upTo: Long): Unit = advance(r.name, q(r.name)) { qu =>
+    qu.holds.get(r.id).foreach(h => h.pos = math.max(h.pos, upTo))
+    lowestHold(qu).getOrElse(qu.committed)
+  }
+
+  /** Drop the holds of stopped readers that can no longer resume, then
+    * return the lowest offset a remaining hold has committed. */
+  private def lowestHold(qu: Q): Option[Long] = {
+    qu.holds.filterInPlace((_, h) => h.live || h.reader.resumable())
+    qu.holds.valuesIterator.map(_.pos).minOption
+  }
+
+  /** Move `committed` to `target` (under the queue lock) when it grows,
+    * fire the hooks for the new range, then release it. */
+  private def advance(name: String, qu: Q)(target: Q => Long): Unit = qu.commitLock.synchronized {
+    val range = qu.synchronized {
+      val t = target(qu)
+      if (t > qu.committed) { val from = qu.committed; qu.committed = t; Some((from, t)) }
+      else None
     }
     range.foreach { case (from, until) =>
       Option(commitHooks.get(name)).toSeq
@@ -118,12 +181,32 @@ object QueueRamp {
             e.printStackTrace()
           }
         }
+      qu.synchronized {
+        val n = math.min(until, qu.size) - qu.base
+        qu.entries.dropInPlace(n.toInt)
+        qu.base += n
+      }
     }
   }
 
   def committed(name: String): Long = q(name).synchronized(q(name).committed)
-  def ackedIds(name: String): Seq[String] = q(name).synchronized(q(name).acked.map(_.id).toSeq)
+  /** Forget the queue, its hooks and every hold on it. */
   def drop(name: String): Unit = { queues.remove(name); commitHooks.remove(name) }
+
+  /** Entries still held: the ones some reader has not committed. */
+  private[sources] def retained(name: String): Int = q(name).synchronized(q(name).entries.size)
+
+  /** The holds' committed offsets, ascending, stopped readers' included. */
+  private[sources] def readerPositions(name: String): Seq[Long] =
+    q(name).synchronized(q(name).holds.values.map(_.pos).toVector.sorted)
+
+  /** Test hook: an empty, unread queue whose first offset is `offset`,
+    * as if `offset` messages had been enqueued and committed. */
+  private[sources] def startAt(name: String, offset: Long): Unit = q(name).synchronized {
+    require(q(name).entries.isEmpty && q(name).holds.isEmpty, s"queue '$name' is not empty and unread")
+    q(name).base = offset
+    q(name).committed = offset
+  }
 
   /** Mark the queue as DRAINING: its producer is finished forever (a
     * Kinesis shard closed by a reshard, fully enqueued). The engine

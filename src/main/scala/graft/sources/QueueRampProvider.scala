@@ -1,6 +1,8 @@
 package graft.sources
 
 import java.util
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -11,14 +13,15 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** DataSource V2 micro-batch source implementing the ramp contract
   * (SURVEY.md §2.1 #2, §7.2 step 5):
   *
   *  - offsets = queue positions; `latestOffset` admits everything
-  *    currently enqueued (a real source would also apply
-  *    `maxOffsetsPerTrigger`-style admission control ≙ the reference's
-  *    3,000-uncompleted backpressure bound);
+  *    currently enqueued, or at most `maxPerTrigger` rows per batch
+  *    (admission control ≙ the reference's 3,000-uncompleted
+  *    backpressure bound);
   *  - `planInputPartitions(start, end)` splits the range across
   *    `partitions` readers (≙ shard→consumer-thread mapping of the
   *    Kinesis ramp, `contrib/amazon_kinesis/ramps.py:186-315`);
@@ -28,7 +31,12 @@ import scala.jdk.CollectionConverters._
   *    engine delivers it when the NEXT batch is constructed, so acks
   *    lag one batch (same contract as the reference's Kafka ramp, which
   *    commits the oldest uncompleted offset as consumption proceeds,
-  *    `contrib/kafka/ramps.py:180-198`).
+  *    `contrib/kafka/ramps.py:180-198`). Each stream holds its queue
+  *    at the offset it has committed, from construction until its
+  *    query's checkpoint is gone, and a message is acked and released
+  *    once every hold has committed it, so two queries on one ramp both
+  *    sink it first, and a stopped one still finds it on restart (see
+  *    [[QueueRamp]]).
   *
   * Usage:
   * {{{
@@ -68,7 +76,7 @@ final class QueueRampTable(queue: String, partitions: Int, maxPerTrigger: Long) 
     () => new Scan {
       override def readSchema(): StructType = QueueRampProvider.Schema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new QueueRampStream(queue, partitions, maxPerTrigger)
+        new QueueRampStream(queue, partitions, maxPerTrigger, checkpointLocation)
     }
 }
 
@@ -76,11 +84,21 @@ final case class QueuePosition(pos: Long) extends Offset {
   override def json(): String = pos.toString
 }
 
-final class QueueRampStream(queue: String, partitions: Int, maxPerTrigger: Long)
+final class QueueRampStream(queue: String, partitions: Int, maxPerTrigger: Long, checkpointLocation: String)
     extends MicroBatchStream with SupportsAdmissionControl {
+  // Spark passes `<query checkpoint>/sources/<n>`. A stopped query can
+  // resume while its checkpoint exists; Spark deletes a temporary one
+  // on stop. An unreadable filesystem counts as resumable.
+  private val reader = {
+    val ckpt = new Path(checkpointLocation)
+    val root = if (ckpt.getParent != null && ckpt.getParent.getName == "sources") ckpt.getParent.getParent else ckpt
+    val conf = SparkContext.getOrCreate().hadoopConfiguration
+    new QueueRamp.Reader(queue, checkpointLocation,
+      () => Try(root.getFileSystem(conf).exists(root)).getOrElse(true))
+  }
   // bootstrap: the ramp is startable against a queue nobody has
   // produced to yet (reference get-or-create, amazon_sqs/mixins.py:6-19)
-  QueueRamp.ensureQueue(queue)
+  QueueRamp.register(reader)
 
   override def initialOffset(): Offset = QueuePosition(0L)
   override def latestOffset(): Offset = QueuePosition(QueueRamp.size(queue))
@@ -103,7 +121,7 @@ final class QueueRampStream(queue: String, partitions: Int, maxPerTrigger: Long)
     // is withheld until a next batch that will never construct (see
     // [[QueueRamp.markDrainable]]). Non-draining queues keep the
     // engine's own commit timing.
-    if (QueueRamp.isDrainable(queue)) QueueRamp.commitUpTo(queue, from)
+    if (QueueRamp.isDrainable(queue)) QueueRamp.commit(reader, from)
     limit match {
       case r: ReadMaxRows => QueuePosition(math.min(available, from + r.maxRows()))
       case _              => QueuePosition(available)
@@ -130,9 +148,9 @@ final class QueueRampStream(queue: String, partitions: Int, maxPerTrigger: Long)
 
   /** ≙ ramp.success() for every message in the committed range. */
   override def commit(end: Offset): Unit =
-    QueueRamp.commitUpTo(queue, end.asInstanceOf[QueuePosition].pos)
+    QueueRamp.commit(reader, end.asInstanceOf[QueuePosition].pos)
 
-  override def stop(): Unit = ()
+  override def stop(): Unit = QueueRamp.stopReader(reader)
 }
 
 final case class QueueRangePartition(queue: String, from: Long, until: Long) extends InputPartition

@@ -109,13 +109,14 @@ class PropertySpec extends AnyFunSuite {
     forAll(ops) { commits =>
       val qn = s"prop-${util.hashing.MurmurHash3.seqHash(commits)}"
       QueueRampTestAccess.reset(qn, 20)
+      val acks = new graft.sources.AckRecorder(qn)
       var high = 0L
       commits.foreach { c =>
         graft.sources.QueueRamp.commitUpTo(qn, math.min(c, 20))
         high = math.max(high, math.min(c, 20))
         assert(graft.sources.QueueRamp.committed(qn) == high) // monotone
       }
-      assert(graft.sources.QueueRamp.ackedIds(qn) == (0L until high).map(_.toString))
+      assert(acks.acked == (0L until high).map(_.toString))
       graft.sources.QueueRamp.drop(qn)
     }
   }

@@ -18,6 +18,7 @@ class CloudClientSeamSpec extends AnyFunSuite {
     (1 to 10).foreach(i => api.append("s", "shard-1", s"k$i", s"rec$i"))
     val c = new KinesisShardConsumer("s", "shard-1", "w1", api, leases, maxUncompleted = 3)
     QueueRamp.drop(c.queue)
+    val acks = new AckRecorder(c.queue)
     assert(c.claim(), "first registration")
     // backpressure: max 3 uncompleted → poll caps at 3 then refuses
     assert(c.poll(limit = 3) == 3)
@@ -36,7 +37,7 @@ class CloudClientSeamSpec extends AnyFunSuite {
     QueueRamp.commitUpTo(c.queue, QueueRamp.size(c.queue))
     assert(c.checkpoint())
     assert(leases.get("shard-1").get.checkpoint == 10L)
-    assert(QueueRamp.ackedIds(c.queue) == (1 to 10).map(i => s"shard-1-$i"))
+    assert(acks.acked == (1 to 10).map(i => s"shard-1-$i"))
     QueueRamp.drop(c.queue)
   }
 
@@ -79,6 +80,7 @@ class CloudClientSeamSpec extends AnyFunSuite {
     val coordB = new ShardLeaseCoordinator("wB", leases)
     assert(coordB.canClaimShard("shard-1"), "dead owner must be claimable")
     val b = new KinesisShardConsumer("s", "shard-1", "wB", api, leases)
+    val acks = new AckRecorder(b.queue)
     assert(b.claim(), "takeover CAS")
     assert(leases.get("shard-1").get.checkpoint == 8L, "checkpoint transferred, not reset")
     // B resumes strictly after 8: replays 9..12 (uncommitted = at-least-once), reads 13..20
@@ -87,7 +89,7 @@ class CloudClientSeamSpec extends AnyFunSuite {
     QueueRamp.commitUpTo(b.queue, QueueRamp.size(b.queue))
     assert(b.checkpoint())
     assert(leases.get("shard-1").get.checkpoint == 20L, "converged to the head")
-    assert(QueueRamp.ackedIds(b.queue) == (9 to 20).map(i => s"shard-1-$i"),
+    assert(acks.acked == (9 to 20).map(i => s"shard-1-$i"),
       "exactly the uncommitted suffix replayed — nothing lost, nothing before the checkpoint")
     QueueRamp.drop(b.queue)
   }
@@ -150,6 +152,7 @@ class CloudClientSeamSpec extends AnyFunSuite {
       "bootstrap: the parentless shard registers")
     val parent = new KinesisShardConsumer("s", "shard-1", "w1", api, leases)
     QueueRamp.drop(parent.queue)
+    val parentAcks = new AckRecorder(parent.queue)
     assert(parent.claim())
     assert(parent.poll() == 10)
     QueueRamp.commitUpTo(parent.queue, 6)
@@ -173,16 +176,16 @@ class CloudClientSeamSpec extends AnyFunSuite {
       Seq("shard-2", "shard-3"))
     val kids = Seq("shard-2", "shard-3").map { id =>
       val c = new KinesisShardConsumer("s", id, "w1", api, leases)
-      QueueRamp.drop(c.queue); assert(c.claim()); c
+      QueueRamp.drop(c.queue); assert(c.claim()); (c, new AckRecorder(c.queue))
     }
-    kids.foreach { c =>
+    kids.foreach { case (c, _) =>
       assert(c.poll() == 1, "child starts at its TRIM_HORIZON (checkpoint 0)")
       QueueRamp.commitUpTo(c.queue, 1)
       assert(c.checkpoint())
     }
-    assert(QueueRamp.ackedIds(parent.queue) == (1 to 10).map(i => s"shard-1-$i"))
-    assert(kids.flatMap(c => QueueRamp.ackedIds(c.queue)) == Seq("shard-2-1", "shard-3-1"))
-    (parent +: kids).foreach(c => QueueRamp.drop(c.queue))
+    assert(parentAcks.acked == (1 to 10).map(i => s"shard-1-$i"))
+    assert(kids.flatMap(_._2.acked) == Seq("shard-2-1", "shard-3-1"))
+    (parent +: kids.map(_._1)).foreach(c => QueueRamp.drop(c.queue))
   }
 
   test("shard merge: the child waits for BOTH parents to drain") {
