@@ -282,38 +282,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate's LEGACY fallback threshold is 128 distinct
-      // keys per task, after which every collect_list/typed-imperative
-      // aggregate dumps to an external sorter and SORT-aggregates by
-      // the (often string) group key — profiled as the dominant frame
-      // in the dedup family's text-keyed collapses. 256k entries keeps
-      // the hash path for realistic per-task key counts. NOTE the
-      // threshold bounds ENTRY COUNT, not bytes: for text-keyed maps
-      // (distinctTextToks) each entry holds the full group-key text, so
-      // worst-case task memory is 256k x max text length -- ~100 MB at
-      // this corpus's ~400 B texts but multi-GB for multi-KB documents.
-      // r19: the targetTaskBytes / maxKeyBytes arithmetic is now the
-      // configuration surface itself — see SessionTuning (env-overridable
-      // byte budget; default derives the same 262144).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.SessionTuning.objectHashFallbackEntries.toString)
-      // Force the SORT shuffle writer (r18, measured): with R = cpus
-      // reduce partitions the bypass-merge writer creates M x R temp
-      // files per shuffle and NIO-merges them -- profiled as the
-      // dominant frames (copyFileStreamNIO / DiskBlockObjectWriter)
-      // of every shuffle-heavy query on this host (q28 steady state
-      // halved, 3.1 -> 1.6 s). Production clusters run R >> 200 where
-      // bypass never engages, so the sort writer is also the at-scale
-      // code path; this makes the local bench exercise it.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-bench", s"local[$cpus]")
 
     // Probe mode (child of forkProbeMedian): run ONE query warm-then-
     // timed in this fresh JVM, print the time, exit. No priors, no
@@ -322,8 +291,7 @@ object Bench {
       val fn = SparkEntry.queries.getOrElse(probeName,
         sys.error(s"unknown probe query $probeName"))
       try { fn(spark, sfDir).count() } catch { case _: Throwable => () } // warm
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      SessionTuning.releaseCaches(spark)
       // family members probe under the same warm-build conditions the
       // main loop times them under (see PairFamily), or the fork would
       // compare a cold build against a warm prior and cry regression
@@ -393,19 +361,16 @@ object Bench {
     // everything a query left behind so leftovers can't distort a later
     // query's memory budget. Three layers, because each covers storage
     // the others can't reach:
-    //  - clearCache(): Dataset persists registered in the CacheManager
-    //    (e.g. allPairsJaccardOn's MEMORY_AND_DISK corpus);
-    //  - getPersistentRDDs sweep: RDD-level persists the CacheManager
-    //    never sees — localCheckpoint() blocks (ConnectedComponents'
-    //    final labels generation) live here;
+    //  - SessionTuning.releaseCaches: Dataset persists registered in the
+    //    CacheManager (e.g. allPairsJaccardOn's MEMORY_AND_DISK corpus),
+    //    then the RDD-level persists it never sees — localCheckpoint()
+    //    blocks (ConnectedComponents' final labels generation) live here;
     //  - System.gc(): broadcasts/shuffle state free via the weak-ref
     //    ContextCleaner, which only runs when the JVM collects — 113
     //    queries accumulate enough to age the heap otherwise (the
     //    round-4 in-run-vs-isolated 3x drift on heavy queries).
     def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      SessionTuning.releaseCaches(spark)
       System.gc()
     }
 

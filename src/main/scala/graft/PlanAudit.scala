@@ -1,18 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints formatted plans for representative queries and
   * greps for the properties that matter at scale — filter pushdown,
   * column pruning, broadcast joins, whole-stage codegen spans. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.session("graft-plan-audit", "local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q01_pricing_summary", "q02_filter_pushdown", "q03_top_revenue",
@@ -20,7 +14,6 @@ object PlanAudit {
     names.foreach { n =>
       println(s"\n===================== $n =====================")
       val df = SparkEntry.queries(n)(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
       println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()

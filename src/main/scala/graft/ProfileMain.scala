@@ -11,31 +11,16 @@ import scala.collection.mutable
   * regressions (serial scan-stage kernels from pushed-down derived
   * predicates, the ObjectHashAggregate sort fallback, cache lock
   * contention). `GRAFT_PROFILE_PLAN=1` additionally dumps the executed
-  * plan with per-node metrics. Usage:
+  * plan with per-node metrics; `SPARK_GRAFT_CPUS` sets the core count
+  * (default 32). Usage:
   * `sbt "runMain graft.ProfileMain q29 [sfDir] [reps]"`. */
 object ProfileMain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      // GRAFT_PROFILE_CPUS: profile the same query at a different core
-      // count (r19 — adjudicating 8c/32c inversions needs the frame
-      // histogram at BOTH widths, not just the wall times)
-      .appName("graft-profile")
-      .master(s"local[${sys.env.getOrElse("GRAFT_PROFILE_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_PROFILE_CPUS", "32"))
-      // Force the SORT shuffle writer (r18, measured — see Bench.scala
-      // for the rationale); GRAFT_BYPASS_THRESHOLD overrides for A/B
-      // profiling of the writer paths.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.SessionTuning.objectHashFallbackEntries.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-profile",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
     val stages = mutable.ArrayBuffer[(Int, String, Long, Long, Int)]()
     val jobs = mutable.ArrayBuffer[(Int, Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {

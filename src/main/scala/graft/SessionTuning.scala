@@ -1,11 +1,65 @@
 package graft
 
-/** Engine-tuning derivations shared by every session builder (Bench,
-  * Verify, StressMain, ProfileMain and the example mains), so a value
-  * that must scale with the deployment is derived in ONE place instead
-  * of being a constant copied seven times.
+import org.apache.spark.sql.SparkSession
+
+/** Builds the one Spark session every entry point (Bench, Verify,
+  * StressMain, ProfileMain, PlanAudit, the example mains) and the test
+  * base `SparkSpecBase` run on, with the measured engine tuning set in
+  * one place, and derives the values that must scale with the
+  * deployment. `session` is the only `SparkSession.builder` in the
+  * program; `SessionBuilderGateSpec` keeps it that way.
   */
 object SessionTuning {
+
+  /** The session, for `master` (`local[N]` or a cluster URL), with:
+    *
+    *   - `spark.sql.shuffle.partitions` = the session's core count
+    *     (`defaultParallelism`): every entry point ran one reduce
+    *     partition per core. Set on the session after it starts, since
+    *     a cluster's core count is known only then; a `newSession()`
+    *     therefore starts from Spark's default 200.
+    *   - AQE on (batch queries; Spark turns it off for every streaming
+    *     query's session itself, so micro-batches keep a fixed plan).
+    *   - `objectHashAggregate.sortBased.fallbackThreshold` =
+    *     [[objectHashFallbackEntries]]. The legacy threshold is 128
+    *     distinct keys per task, after which every collect_list or
+    *     typed-imperative aggregate dumps to an external sorter and
+    *     sort-aggregates by its (often string) group key: profiled as
+    *     the dominant frame of the dedup family's text-keyed collapses.
+    *   - `shuffle.sort.bypassMergeThreshold=1`, i.e. the sort shuffle
+    *     writer. With R = cores reduce partitions the bypass-merge writer
+    *     creates M x R temp files per shuffle and NIO-merges them:
+    *     profiled as the dominant frames of every shuffle-heavy query
+    *     (q28 steady state halved, 3.1 -> 1.6 s), and in streaming the
+    *     churn repeats every micro-batch (wordcount 35.9k msgs/s under
+    *     the sort writer vs 21.8k under bypass, back to back).
+    *     Production clusters run R >> 200, where bypass never engages,
+    *     so the sort writer is also the at-scale code path.
+    *   - UTC session time zone, the UI off, log level WARN.
+    */
+  def session(appName: String, master: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .appName(appName)
+      .master(master)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        objectHashFallbackEntries.toString)
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toLong)
+    spark
+  }
+
+  /** Drops everything a query left cached: Dataset persists registered
+    * in the CacheManager (`clearCache`), then the RDD-level persists it
+    * never sees, `localCheckpoint()` blocks included. */
+  def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
 
   /** ObjectHashAggregate's sort-based fallback threshold, derived from a
     * per-task BYTE budget instead of a bare entry count.

@@ -140,39 +140,8 @@ object StressMain {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate's LEGACY fallback threshold is 128 distinct
-      // keys per task, after which every collect_list/typed-imperative
-      // aggregate dumps to an external sorter and SORT-aggregates by
-      // the (often string) group key — profiled as the dominant frame
-      // in the dedup family's text-keyed collapses. 256k entries keeps
-      // the hash path for realistic per-task key counts. NOTE the
-      // threshold bounds ENTRY COUNT, not bytes: for text-keyed maps
-      // (distinctTextToks) each entry holds the full group-key text, so
-      // worst-case task memory is 256k x max text length -- ~100 MB at
-      // this corpus's ~400 B texts but multi-GB for multi-KB documents.
-      // r19: the targetTaskBytes / maxKeyBytes arithmetic is now the
-      // configuration surface itself — see SessionTuning (env-overridable
-      // byte budget; default derives the same 262144).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.SessionTuning.objectHashFallbackEntries.toString)
-      // Force the SORT shuffle writer (r18, measured): with R = cpus
-      // reduce partitions the bypass-merge writer creates M x R temp
-      // files per shuffle and NIO-merges them -- profiled as the
-      // dominant frames (copyFileStreamNIO / DiskBlockObjectWriter)
-      // of every shuffle-heavy query on this host (q28 steady state
-      // halved, 3.1 -> 1.6 s). Production clusters run R >> 200 where
-      // bypass never engages, so the sort writer is also the at-scale
-      // code path; this makes the local bench exercise it.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-stress",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
 
     if (mode == "gen" || mode == "all") {
       val t0 = System.nanoTime()
@@ -216,8 +185,7 @@ object StressMain {
     // earlier ones' blocks, and per-operator numbers stop being
     // per-operator.
     def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      SessionTuning.releaseCaches(spark)
       System.gc()
     }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,39 +10,8 @@ object Verify {
     // q11_distinct_agg, never q110_*).
     val Array(sfDir, outDir) = args.take(2)
     val filter = args.drop(2).headOption.map(_.split(',').map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate's LEGACY fallback threshold is 128 distinct
-      // keys per task, after which every collect_list/typed-imperative
-      // aggregate dumps to an external sorter and SORT-aggregates by
-      // the (often string) group key — profiled as the dominant frame
-      // in the dedup family's text-keyed collapses. 256k entries keeps
-      // the hash path for realistic per-task key counts. NOTE the
-      // threshold bounds ENTRY COUNT, not bytes: for text-keyed maps
-      // (distinctTextToks) each entry holds the full group-key text, so
-      // worst-case task memory is 256k x max text length -- ~100 MB at
-      // this corpus's ~400 B texts but multi-GB for multi-KB documents.
-      // r19: the targetTaskBytes / maxKeyBytes arithmetic is now the
-      // configuration surface itself — see SessionTuning (env-overridable
-      // byte budget; default derives the same 262144).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.SessionTuning.objectHashFallbackEntries.toString)
-      // Force the SORT shuffle writer (r18, measured): with R = cpus
-      // reduce partitions the bypass-merge writer creates M x R temp
-      // files per shuffle and NIO-merges them -- profiled as the
-      // dominant frames (copyFileStreamNIO / DiskBlockObjectWriter)
-      // of every shuffle-heavy query on this host (q28 steady state
-      // halved, 3.1 -> 1.6 s). Production clusters run R >> 200 where
-      // bypass never engages, so the sort writer is also the at-scale
-      // code path; this makes the local bench exercise it.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-verify",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) =>
@@ -54,6 +22,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // no cache outlives its query (some queries persist and never
+      // unpersist; their blocks would pile up across the whole run)
+      SessionTuning.releaseCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.SessionTuning
 import graft.pipeline._
 import graft.streaming.{PipelineStatsListener, StatsServer}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -18,13 +18,8 @@ import org.apache.spark.sql.streaming.OutputMode
 object DashboardMain {
   def main(args: Array[String]): Unit = {
     val runForSec = args.headOption.map(_.toInt).getOrElse(120)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-dashboard")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-dashboard",
+      sys.env.getOrElse("SPARK_MASTER", "local[4]"))
     import spark.implicits._
 
     val listener = new PipelineStatsListener()

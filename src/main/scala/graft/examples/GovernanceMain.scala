@@ -1,7 +1,6 @@
 package graft.examples
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SessionTuning, SparkEntry}
 
 /** The corpus report card — the one-stop governance review a pipeline
   * owner reads before shipping a training corpus, composed entirely
@@ -63,39 +62,8 @@ import org.apache.spark.sql.SparkSession
 object GovernanceMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-governance")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate's LEGACY fallback threshold is 128 distinct
-      // keys per task, after which every collect_list/typed-imperative
-      // aggregate dumps to an external sorter and SORT-aggregates by
-      // the (often string) group key — profiled as the dominant frame
-      // in the dedup family's text-keyed collapses. 256k entries keeps
-      // the hash path for realistic per-task key counts. NOTE the
-      // threshold bounds ENTRY COUNT, not bytes: for text-keyed maps
-      // (distinctTextToks) each entry holds the full group-key text, so
-      // worst-case task memory is 256k x max text length -- ~100 MB at
-      // this corpus's ~400 B texts but multi-GB for multi-KB documents.
-      // r19: the targetTaskBytes / maxKeyBytes arithmetic is now the
-      // configuration surface itself — see SessionTuning (env-overridable
-      // byte budget; default derives the same 262144).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.SessionTuning.objectHashFallbackEntries.toString)
-      // Force the SORT shuffle writer (r18, measured): with R = cpus
-      // reduce partitions the bypass-merge writer creates M x R temp
-      // files per shuffle and NIO-merges them -- profiled as the
-      // dominant frames (copyFileStreamNIO / DiskBlockObjectWriter)
-      // of every shuffle-heavy query on this host (q28 steady state
-      // halved, 3.1 -> 1.6 s). Production clusters run R >> 200 where
-      // bypass never engages, so the sort writer is also the at-scale
-      // code path; this makes the local bench exercise it.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-governance",
+      sys.env.getOrElse("SPARK_MASTER", "local[8]"))
 
     val sections = Seq(
       "source attrition funnel" -> "q141_attrition_funnel",

@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.SessionTuning
 import graft.pipeline._
 import graft.streaming.PipelineStatsListener
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -21,13 +21,8 @@ import org.apache.spark.sql.streaming.OutputMode
 object StreamingCurationMain {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-streaming-curation")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-streaming-curation",
+      sys.env.getOrElse("SPARK_MASTER", "local[4]"))
     import spark.implicits._
 
     val listener = new PipelineStatsListener()

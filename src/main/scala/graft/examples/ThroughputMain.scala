@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.SessionTuning
 import graft.pipeline._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -30,22 +30,7 @@ object ThroughputMain {
   def main(args: Array[String]): Unit = {
     val total = args.headOption.map(_.toInt).getOrElse(200000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-throughput")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false") // streaming: fixed plan
-      // Sort shuffle writer (r18; see Bench.scala for the batch
-      // rationale). A/B'd here too because per-microbatch shuffles are
-      // tiny and frequent — same verdict: wordcount 35.9k msgs/s under
-      // the sort writer vs 21.8k under bypass in back-to-back runs
-      // (the M x R temp-file churn repeats EVERY microbatch).
-      // GRAFT_BYPASS_THRESHOLD overrides for A/Bs.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-throughput", s"local[$cpus]")
     import spark.implicits._
 
     val sentences = Array(

@@ -1,8 +1,8 @@
 package graft.examples
 
+import graft.SessionTuning
 import graft.pipeline._
 import graft.streaming.PipelineStatsListener
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -15,13 +15,8 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object WordCountMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-wordcount")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-wordcount",
+      sys.env.getOrElse("SPARK_MASTER", "local[4]"))
     import spark.implicits._
 
     val listener = new PipelineStatsListener()

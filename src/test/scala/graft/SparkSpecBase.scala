@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all suites (cluster-config parity with
-  * Verify/Bench: UTC, AQE on, small shuffle partitioning). */
+/** One shared local session for all suites, built by the same
+  * `SessionTuning.session` as Bench and Verify, so the specs run the
+  * aggregate and shuffle paths the bench times (four cores, so four
+  * shuffle partitions). */
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sfDir = "/root/testdata/sf0.001"
@@ -26,16 +28,5 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = SessionTuning.session("graft-test", "local[4]")
 }
