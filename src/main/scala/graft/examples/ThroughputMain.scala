@@ -24,7 +24,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * Feeds in 20 offset chunks — the engine schedules micro-batches as
   * it drains them, so trigger scheduling is included (no
   * single-giant-batch flattery); prints msgs/s and words/s.
-  * `sbt "runMain graft.examples.ThroughputMain [messages]"`.
+  * `sbt "runMain graft.examples.ThroughputMain [messages]"`; only the
+  * run without `messages` writes `THROUGHPUT_r{N}.json`.
   */
 object ThroughputMain {
   def main(args: Array[String]): Unit = {
@@ -99,11 +100,14 @@ object ThroughputMain {
       (total / sec, words / sec)
     }
 
-    // Round artifact (VERDICT r10 item 7): one JSON line on stdout plus
-    // a THROUGHPUT_r{N}.json file next to the driver's BENCH_r{N}.json,
-    // so streaming throughput regressions are as visible round-over-
-    // round as batch ones. N is inferred as newest BENCH round + 1 (this
-    // main runs during round N, before the driver writes BENCH_r{N}).
+    // Round artifact: one JSON line on stdout plus, on the configured
+    // run only (no message-count argument), a THROUGHPUT_r{N}.json file
+    // next to the driver's BENCH_r{N}.json, so streaming throughput
+    // regressions are as visible round-over-round as batch ones — a
+    // smoke run at its own count must not leave a file that reads like
+    // the round's measurement. N is inferred as newest BENCH round + 1
+    // (this main runs during round N, before the driver writes
+    // BENCH_r{N}).
     val round = {
       import scala.jdk.CollectionConverters._
       val rs = try java.nio.file.Files.list(java.nio.file.Paths.get(".")).iterator().asScala
@@ -117,10 +121,11 @@ object ThroughputMain {
     val json =
       f"""{"metric":"streaming_throughput","unit":"msgs_per_sec","messages":$total,"cpus":"$cpus","passthrough":$passPerSec%.0f,"wordcount":$wcPerSec%.0f,"words_per_sec":$wordsPerSec%.0f}"""
     println(json)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(f"THROUGHPUT_r$round%02d.json"),
-      (json + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    if (args.isEmpty)
+      try java.nio.file.Files.write(
+        java.nio.file.Paths.get(f"THROUGHPUT_r$round%02d.json"),
+        (json + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () }
 
     spark.stop()
   }

@@ -26,9 +26,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    toward the cap predicts recall loss BEFORE any row is dropped
   *  - `n_runs`         — executions that reported this tag in the
   *    window, so an artifact reader can normalize the summed counters
-  *    per execution (Bench reruns/swing probes re-execute capped
-  *    queries; without n_runs the sums inflate by a run-dependent
-  *    multiple — ADVICE r16).
+  *    per execution (several queries, or several executions of one,
+  *    report the same tag; without n_runs the sums inflate by a
+  *    run-dependent multiple).
   *
   * Values ACCUMULATE per tag within a window (see [[record]]); reset()
   * starts a fresh window. Listener delivery is async (Spark's listener
