@@ -9,8 +9,8 @@ import scala.util.control.NonFatal
   *
   * An untimed warmup comes first so JVM/codegen startup isn't charged to
   * whichever query happens to run first, then an input sanity gate fails
-  * the run if a table it reads is empty. Every query is timed, then
-  * swept untimed (caches, RDD persists, GC), and its GC time and
+  * the run if a table it reads is empty. Every query runs through
+  * [[RegistryRunner.run]]: timed, then swept untimed, and its GC time and
   * post-sweep heap ride the per-query record. A query that throws is
   * recorded as failed with its error, never as a time: it stays out of
   * the total and `worst5`, `n_failed` counts it, and the process exits 1
@@ -33,12 +33,6 @@ object Bench {
     "q146_pagerank", "q158_incremental_cc", "q159_threshold_sweep",
     "q196_neardup_purge_apply")
 
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-  }
-
   private def f3(v: Double): String =
     BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
@@ -47,13 +41,10 @@ object Bench {
     JsonMethods.compact(JsonMethods.render(org.json4s.JString(s)))
   }
 
-  /** One query's run: wall seconds, GC ms during the run and heap MB
-    * after the sweep — or, when it threw, `err` ("<class>: <message>")
-    * and a `sec` that is not a time. */
-  private[graft] final case class Timed(name: String, sec: Double, gcMs: Long,
-      heapMb: Long, err: Option[String])
+  private[graft] type Timed = RegistryRunner.Timed
+  private[graft] val Timed = RegistryRunner.Timed
 
-  /** A whole run's results in registry order, and its renderings. The
+  /** A whole run's results in name order, and its renderings. The
     * compact headline (~400 B) is printed first and last so a capture of
     * either end of stdout keeps a whole parseable object; the big line
     * and the files carry the per-query record. */
@@ -103,39 +94,6 @@ object Bench {
     * one prime. */
   private[graft] def timeSuite(spark: SparkSession, sfDir: String, cpus: String,
       selected: Seq[(String, (SparkSession, String) => DataFrame)]): Suite = {
-    // Isolation (untimed — the metric is the sum of per-query dt): drop
-    // everything a query left behind so leftovers can't distort a later
-    // query's memory budget. Three layers, because each covers storage
-    // the others can't reach:
-    //  - SessionTuning.releaseCaches: Dataset persists registered in the
-    //    CacheManager (e.g. allPairsJaccardOn's MEMORY_AND_DISK corpus),
-    //    then the RDD-level persists it never sees — localCheckpoint()
-    //    blocks (ConnectedComponents' final labels generation) live here;
-    //  - System.gc(): broadcasts/shuffle state free via the weak-ref
-    //    ContextCleaner, which only runs when the JVM collects — a long
-    //    suite ages the heap otherwise (heavy queries measured ~3x their
-    //    isolated cost late in a run).
-    def sweep(): Unit = {
-      SessionTuning.releaseCaches(spark)
-      System.gc()
-    }
-
-    val rt = Runtime.getRuntime
-    // timed run + untimed sweep. NonFatal only: a fatal error (OOM,
-    // linkage) ends the run instead of reading as one failed query.
-    def runOnceWith(name: String, fn: (SparkSession, String) => DataFrame,
-        sweeper: () => Unit): Timed = {
-      val gc0 = gcMillis()
-      val t0 = System.nanoTime()
-      val err =
-        try { fn(spark, sfDir).count(); None }
-        catch { case NonFatal(e) => Some(s"${e.getClass.getName}: ${e.getMessage}") }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val gcd = gcMillis() - gc0
-      sweeper()
-      Timed(name, dt, gcd, (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024), err)
-    }
-
     // Family prime: the near-dup-graph queries all derive from the ONE
     // canonical pair relation allPairsJaccard(0.5). Spark's cache
     // manager keys on the canonicalized plan, so persisting and counting
@@ -149,7 +107,8 @@ object Bench {
     // untimed but reported (family_prime_sec / family_primes).
     val (famSelected, restSelected) =
       selected.partition(p => PairFamily.contains(p._1))
-    val restResults = restSelected.map { case (name, fn) => runOnceWith(name, fn, () => sweep()) }
+    val restResults =
+      restSelected.map { case (name, fn) => RegistryRunner.run(spark, sfDir, name, fn, _.count()) }
     val (famResults, familyPrimeSec) =
       if (famSelected.isEmpty) (Seq.empty[Timed], 0.0)
       else {
@@ -182,11 +141,13 @@ object Bench {
             .values.foreach(_.unpersist(blocking = true))
           System.gc()
         }
-        val rs = famSelected.map { case (name, fn) => runOnceWith(name, fn, () => famSweep()) }
-        sweep() // full three-layer sweep once the block is done
+        val rs = famSelected.map { case (name, fn) =>
+          RegistryRunner.run(spark, sfDir, name, fn, _.count(), _ => famSweep())
+        }
+        RegistryRunner.sweep(spark) // full sweep once the block is done
         (rs, primeSec)
       }
-    // registry order keeps the artifacts deterministic
+    // name order keeps the artifacts deterministic
     Suite(sfDir, cpus, (restResults ++ famResults).sortBy(_.name),
       familyPrimeSec, familyPrimes = if (famSelected.isEmpty) 0 else 1)
   }
@@ -218,13 +179,20 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Optional comma-separated query filter for local iteration, e.g.
+    // SPARK_GRAFT_QUERIES=q61,q78; unset, the whole registry runs.
+    val filter = sys.env.get("SPARK_GRAFT_QUERIES")
+    val selected = SparkEntry.select(filter.toSeq.flatMap(_.split(',')))
+      .map(q => q.name -> q.run).sortBy(_._1)
     val spark = SessionTuning.session("graft-bench", s"local[$cpus]")
 
     // Warmup: touch every table scan + exercise codegen/shuffle machinery.
     val t = Tables(spark, sfDir)
     Seq(t.lineitem, t.orders, t.customer, t.events, t.documents, t.embeddings)
       .foreach(df => df.limit(1).count())
-    SparkEntry.queries.get("q01_pricing_summary").foreach(f => f(spark, sfDir).count())
+    // a scan + aggregate and a join: the first join otherwise pays the
+    // join machinery's first-execution cost inside its timed number
+    SparkEntry.select(Seq("q01", "q03")).foreach(_.run(spark, sfDir).count())
     // ensure the bucketed corpus layout UNTIMED: its one-time write (or
     // per-JVM re-register) is campaign setup, not q166's per-pass cost.
     // Touch the scan too — per-file footer reads + FileStatusCache fill
@@ -261,13 +229,6 @@ object Bench {
         s"events.ts normalized to ${t.events.schema("ts").dataType}, expected TIMESTAMP")
     }
 
-    // Optional comma-separated query filter for local iteration, e.g.
-    // SPARK_GRAFT_QUERIES=q61,q78 — driver runs unfiltered. Matches the
-    // full name or the qNNN id (exact, so "q11" never selects q110_*).
-    val filter = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(',').map(_.trim).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      filter.forall(f => f.contains(n) || f.contains(n.takeWhile(_ != '_')))
-    }
     val suite = timeSuite(spark, sfDir, cpus, selected)
 
     // listener delivery is async; the fence guarantees every capped
@@ -277,6 +238,6 @@ object Bench {
     // last-run record
     emit(suite, graft.metrics.CapObservatory.snapshotJson(),
       writeArtifacts = filter.isEmpty, stop = () => spark.stop())
-    if (suite.nFailed > 0) sys.exit(1)
+    RegistryRunner.exitIfFailed(suite.timed)
   }
 }

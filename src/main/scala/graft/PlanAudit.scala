@@ -6,16 +6,16 @@ package graft
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val selected = SparkEntry.select(
+      if (args.nonEmpty) args.toSeq else Seq("q01", "q02", "q03", "q04", "q09", "q31"))
     val spark = SessionTuning.session("graft-plan-audit", "local[4]")
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else Seq(
-      "q01_pricing_summary", "q02_filter_pushdown", "q03_top_revenue",
-      "q04_region_revenue", "q09_topk", "q31_ann_brute")
-    names.foreach { n =>
-      println(s"\n===================== $n =====================")
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+    val results = selected.map { q =>
+      println(s"\n===================== ${q.name} =====================")
+      RegistryRunner.run(spark, sfDir, q.name, q.run, df =>
+        println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)))
     }
     spark.stop()
+    RegistryRunner.exitIfFailed(results)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Local profiling harness (not part of the driver contract): runs one
@@ -16,7 +15,7 @@ import scala.collection.mutable
   * `sbt "runMain graft.ProfileMain q29 [sfDir] [reps]"`. */
 object ProfileMain {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val q = SparkEntry.select(Seq(args(0))).head
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = SessionTuning.session("graft-profile",
@@ -36,8 +35,7 @@ object ProfileMain {
           String.valueOf(js.properties.getProperty("callSite.short", ""))))
       }
     })
-    val q: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      SparkEntry.queries(SparkEntry.queries.keys.find(_.startsWith(name)).getOrElse(name))
+    println(s"== profiling ${q.name}")
     def dumpPlan(df: org.apache.spark.sql.DataFrame): Unit = {
       import org.apache.spark.sql.execution._
       import org.apache.spark.sql.execution.adaptive._
@@ -79,15 +77,14 @@ object ProfileMain {
     })
     sampler.setDaemon(true)
     sampler.start()
-    var lastDf: org.apache.spark.sql.DataFrame = null
-    for (i <- 1 to reps) {
-      spark.catalog.clearCache()
+    val runs = (1 to reps).map { i =>
       stages.clear()
-      val t0 = System.nanoTime()
-      val df = q(spark, sfDir)
-      val n = df.collect().length
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== run $i: $dt%.2f s, $n rows, ${stages.size} stages")
+      var df: org.apache.spark.sql.DataFrame = null
+      var n = 0
+      val r = RegistryRunner.run(spark, sfDir, q.name, q.run,
+        d => { df = d; n = d.collect().length })
+      println(r.err.fold(f"== run $i: ${r.sec}%.2f s, $n rows, ${stages.size} stages")(
+        e => s"== run $i: err $e"))
       stages.filter(_._3 > 900).sortBy(_._1).foreach { case (id, nm, wall, run, nt) =>
         // exact stage-id membership only (latest job wins): a prefix
         // match like contains("[1") would attribute stage 1 to a job
@@ -96,7 +93,7 @@ object ProfileMain {
           .exists(_.split(',').map(_.trim).contains(id.toString)))
         println(f"   [slow] stage $id%4d wall=${wall}%6d ms taskRun=${run}%7d ms tasks=$nt%3d job=${job.map(_._3).getOrElse("?")}")
       }
-      if (i == reps && sys.env.contains("GRAFT_PROFILE_PLAN")) dumpPlan(df)
+      if (i == reps && sys.env.contains("GRAFT_PROFILE_PLAN")) Option(df).foreach(dumpPlan)
       if (i == reps) {
         sampling.set(false)
         import scala.jdk.CollectionConverters._
@@ -111,7 +108,9 @@ object ProfileMain {
         }
         println(f"  total stage wall: ${stages.map(_._3).sum} ms, total taskRun: ${stages.map(_._4).sum} ms")
       }
+      r
     }
     spark.stop()
+    RegistryRunner.exitIfFailed(runs)
   }
 }

@@ -53,14 +53,6 @@ object SessionTuning {
     spark
   }
 
-  /** Drops everything a query left cached: Dataset persists registered
-    * in the CacheManager (`clearCache`), then the RDD-level persists it
-    * never sees, `localCheckpoint()` blocks included. */
-  def releaseCaches(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-  }
-
   /** ObjectHashAggregate's sort-based fallback threshold, derived from a
     * per-task BYTE budget instead of a bare entry count.
     *

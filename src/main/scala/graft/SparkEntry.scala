@@ -39,6 +39,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.run).toMap
 
+  /** The registry queries `ids` name, in registry order. An id is a full
+    * name or the exact id before its first `_`, so `q11` selects
+    * `q11_distinct_agg` and never `q110_*`. An id that selects nothing
+    * throws naming it; no ids select the whole registry. */
+  def select(ids: Seq[String]): Seq[GraftQuery] = {
+    def idsOf(q: GraftQuery) = Set(q.name, q.name.takeWhile(_ != '_'))
+    val wanted = ids.map(_.trim).toSet
+    val unknown = wanted -- registry.flatMap(idsOf)
+    require(unknown.isEmpty, s"no registry query has the id ${unknown.mkString(", ")}")
+    if (ids.isEmpty) registry else registry.filter(q => idsOf(q).exists(wanted))
+  }
+
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB
     * on the same parquet tables. Omitted for non-SQL-expressible ops
     * (LSH/sketch/heuristic operators) → driver records rows-only. */

@@ -138,6 +138,28 @@ object StressMain {
     // 50k real WAV per-sample decodes in the scan stage
     "q201_crossmodal_align", "q203_audio_quality_gate")
 
+  /** `curve` mode's default operators: one representative per family. */
+  val CurveQueries = Seq(
+    "q01_pricing_summary",   // scan + hash agg
+    "q27_dedup_exact",       // single hash-shuffle groupBy
+    "q29_dedup_minhash",     // LSH banding over distinct signatures (r17 collapse)
+    "q30_dedup_simhash",     // simhash banding over distinct fingerprints
+    "q80_zipf",              // token explode + vocab agg + top-k
+    "q100_allpairs_jaccard", // prefix-filtered exact pair space
+    "q132_boilerplate_purge", // distinct-text-grain df table + broadcast purge (r17)
+    "q84_dup_clusters",      // pairs + connected components
+    "q37_ann_ivf",           // kernel-assigned index search
+    "q119_embed_int8",       // map-only train+encode
+    "q110_sequence_pack",    // two-level prefix sum
+    "q158_incremental_cc",   // delta-contracted clustering (vs q84's full)
+    "q146_pagerank",         // fixed-point power iteration on the dup graph
+    "q167_span_purge",       // span agg + equi-join + doc reassembly
+    "q183_exact_substring",  // token-grain gram census + window merge
+    "q188_gopher_dup_ngrams", // fused map-only dup-n-gram kernel (r16)
+    "q194_media_dedup_groups", // media axis: real PNG encode+decode+pool in the scan
+    "q202_image_phash_neardup", // dHash + Hamming-band join over real decode
+    "q203_audio_quality_gate") // per-sample real PCM decode in the scan
+
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
     val spark = SessionTuning.session("graft-stress",
@@ -179,15 +201,7 @@ object StressMain {
       println(f"[stress] cc driver fallback at ${undirectedEdges * 2} directed edges: labeled=$n in ${sec}%.1f s, heap base $base MB -> peak $peak MB (delta ${peak - base} MB)")
       edges.unpersist()
     }
-    // untimed sweep between timed queries (Bench's isolation layers):
-    // the heavy list persists several 10x shingled corpora — left to
-    // accumulate, later queries pay eviction churn and GC debt for
-    // earlier ones' blocks, and per-operator numbers stop being
-    // per-operator.
-    def sweep(): Unit = {
-      SessionTuning.releaseCaches(spark)
-      System.gc()
-    }
+    val results = Seq.newBuilder[RegistryRunner.Timed]
 
     if (mode == "curve") {
       // Scaling-curve mode: run one representative operator per family
@@ -204,15 +218,13 @@ object StressMain {
       // sharpen the exponent (less overhead-dominated) and push the dup
       // graph past the 1M-directed-edge cutover, so the DISTRIBUTED
       // connected-components loop gets a curve point too. An optional
-      // third arg filters the operator list by qNN prefix or full name
-      // (`curve 30 q194,q202,q203`) so a deep point doesn't force the
-      // heavy pair-space operators through 30x data generation runs.
-      // `curve q194` (filter without an explicit extra scale) must
-      // filter, not crash with NumberFormatException (ADVICE r16): a
-      // non-numeric second arg IS the filter.
+      // last arg names the operators to run instead of CurveQueries
+      // (`curve 30 q194,q202,q203`, or `curve q194` at the built-in
+      // scales), so a deep point doesn't force the heavy pair-space
+      // operators through 30x data generation runs.
       val extra = args.lift(1).flatMap(a => scala.util.Try(a.toInt).toOption)
-      val curveFilter = (if (extra.isDefined) args.lift(2) else args.lift(1))
-        .map(_.split(',').map(_.trim).toSet)
+      val curveSelected = SparkEntry.select((if (extra.isDefined) args.lift(2) else args.lift(1))
+        .fold(CurveQueries)(_.split(',').toSeq))
       extra.filter(_ <= 10).foreach(s =>
         println(s"[stress] extra scale $s ignored (must exceed the built-in 10x point)"))
       val scales = Seq(1, 3, 10) ++ extra.filter(_ > 10)
@@ -229,47 +241,26 @@ object StressMain {
           gen(spark, dirs(1), d, c)
           println(f"[stress] generated ${c}x data in ${(System.nanoTime() - t0) / 1e9}%.1f s")
         }
-      val curveQueries = Seq(
-        "q01_pricing_summary",   // scan + hash agg
-        "q27_dedup_exact",       // single hash-shuffle groupBy
-        "q29_dedup_minhash",     // LSH banding over distinct signatures (r17 collapse)
-        "q30_dedup_simhash",     // simhash banding over distinct fingerprints
-        "q80_zipf",              // token explode + vocab agg + top-k
-        "q100_allpairs_jaccard", // prefix-filtered exact pair space
-        "q132_boilerplate_purge", // distinct-text-grain df table + broadcast purge (r17)
-        "q84_dup_clusters",      // pairs + connected components
-        "q37_ann_ivf",           // kernel-assigned index search
-        "q119_embed_int8",       // map-only train+encode
-        "q110_sequence_pack",    // two-level prefix sum
-        "q158_incremental_cc",   // delta-contracted clustering (vs q84's full)
-        "q146_pagerank",         // fixed-point power iteration on the dup graph
-        "q167_span_purge",       // span agg + equi-join + doc reassembly
-        "q183_exact_substring",  // token-grain gram census + window merge
-        "q188_gopher_dup_ngrams", // fused map-only dup-n-gram kernel (r16)
-        "q194_media_dedup_groups", // media axis: real PNG encode+decode+pool in the scan
-        "q202_image_phash_neardup", // dHash + Hamming-band join over real decode
-        "q203_audio_quality_gate")  // per-sample real PCM decode in the scan
-      val curveSelected = curveQueries.filter(q =>
-        curveFilter.forall(f => f.contains(q) || f.contains(q.takeWhile(_ != '_'))))
-      SparkEntry.queries("q27_dedup_exact")(spark, dirs(1)).count(); sweep()
-      def timeBestOf2(q: String, dir: String): Double =
-        (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(q)(spark, dir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          sweep(); sec
-        }.min
+      SparkEntry.queries("q27_dedup_exact")(spark, dirs(1)).count()
+      RegistryRunner.sweep(spark)
+      // a failed run fails the point: its error, never a best-of time
+      def timeBestOf2(q: GraftQuery, dir: String): RegistryRunner.Timed = {
+        val runs = (1 to 2).map(_ => RegistryRunner.run(spark, dir, q.name, q.run, _.count()))
+        runs.find(_.err.isDefined).getOrElse(runs.minBy(_.sec))
+      }
       val legs = scales.zip(scales.tail)
       println(f"[stress] ${"operator"}%-24s " +
         scales.map(s => f"${s"${s}x"}%7s").mkString(" ") + "   " +
         legs.map { case (a, b) => f"${s"a($a->$b)"}%8s" }.mkString(" "))
       curveSelected.foreach { q =>
         val t = scales.map(s => s -> timeBestOf2(q, dirs(s))).toMap
-        val as = legs.map { case (a, b) =>
-          math.log(t(b) / t(a)) / math.log(b.toDouble / a) }
-        println(f"[stress] $q%-24s " +
-          scales.map(s => f"${t(s)}%6.2fs").mkString(" ") + "   " +
-          as.map(a => f"$a%8.2f").mkString(" "))
+        results ++= t.values
+        // a failed point prints err and leaves the row without exponents
+        val as = if (t.values.exists(_.err.isDefined)) Nil else legs.map { case (a, b) =>
+          math.log(t(b).sec / t(a).sec) / math.log(b.toDouble / a) }
+        println(f"[stress] ${q.name}%-24s " +
+          scales.map(s => t(s).err.fold(f"${t(s).sec}%6.2fs")(_ => f"${"err"}%7s")).mkString(" ") +
+          "   " + as.map(a => f"$a%8.2f").mkString(" "))
       }
       // cap gauges across ALL curve points (accumulated window; the
       // deep scales are exactly where a bounded drop would first show —
@@ -291,7 +282,7 @@ object StressMain {
       if (!new java.io.File(s"$dir/part.parquet").exists()) gen(spark, "/root/testdata/sf0.1")
       val single = graft.queries.Curation4.bloomIncrement(spark, dir, shards = 1)
         .collect().toSeq
-      sweep()
+      RegistryRunner.sweep(spark)
       val (docs, baseDocs) = graft.queries.Curation4.bloomSpanDocs(spark, dir)
       val baseSpans = docs.where(col("_slice") =!= 0)
         .select(explode(col("_sp")).as("span"))
@@ -302,7 +293,7 @@ object StressMain {
         println(f"[stress] bloomshard build $sh/$S ${(System.nanoTime() - t0) / 1e9}%6.2f s  " +
           f"(${bf.bitSize() / 8 / 1024} KiB sketch)")
       }
-      sweep()
+      RegistryRunner.sweep(spark)
       val t0 = System.nanoTime()
       val sharded = graft.queries.Curation4.bloomIncrement(spark, dir, shards = S)
         .collect().toSeq
@@ -311,7 +302,7 @@ object StressMain {
       require(sharded == single,
         s"sharded output diverged: ${sharded.size} rows vs ${single.size}")
       println(s"[stress] bloomshard S=$S output == S=1 output (${single.size} rows)")
-      sweep()
+      RegistryRunner.sweep(spark)
     }
 
     if (mode == "substrgate" || mode == "all") {
@@ -355,7 +346,7 @@ object StressMain {
         val hits = spark.table(name).count()
         q.stop()
         spark.sql(s"DROP TABLE IF EXISTS $name")
-        sweep()
+        RegistryRunner.sweep(spark)
         (sec, stateRows, hits)
       }
       val (s1Sec, s1State, s1Hits) = runGate(0, 1)
@@ -380,16 +371,17 @@ object StressMain {
     if (mode == "run" || mode == "all") {
       // untimed warmup (session/codegen init otherwise lands on query 1)
       SparkEntry.queries("q27_dedup_exact")(spark, StressDir).count()
-      val results = HeavyQueries.map { name =>
-        val t0 = System.nanoTime()
-        val n = try SparkEntry.queries(name)(spark, StressDir).count()
-                catch { case e: Throwable => println(s"[stress] $name FAILED: ${e.getMessage}"); -1L }
-        val sec = (System.nanoTime() - t0) / 1e9
-        sweep()
-        println(f"[stress] $name%-22s ${sec}%8.2f s  rows=$n")
-        name -> sec
+      val heavy = SparkEntry.select(HeavyQueries).map { q =>
+        var n = 0L
+        val r = RegistryRunner.run(spark, StressDir, q.name, q.run, df => n = df.count())
+        println(r.err.fold(f"[stress] ${q.name}%-22s ${r.sec}%8.2f s  rows=$n")(
+          e => s"[stress] ${q.name} FAILED: $e"))
+        r
       }
-      println(f"[stress] TOTAL ${results.map(_._2).sum}%.1f s over ${results.size} heavy queries at 10x sf0.1")
+      results ++= heavy
+      val (ok, failed) = heavy.partition(_.err.isEmpty)
+      println(f"[stress] TOTAL ${ok.map(_.sec).sum}%.1f s over ${ok.size} heavy queries at 10x sf0.1" +
+        (if (failed.isEmpty) "" else s"; failed: ${failed.map(_.name).mkString(", ")}"))
       // bounded-drop observability (r15 VERDICT #2): at 10x the LSH
       // bucket / block caps are the first place recall loss would show
       // (fence = async listener-bus drain, so the last query's metrics
@@ -409,21 +401,21 @@ object StressMain {
         .select("a_id", "b_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nPairs = ccEdges.count()
-      def timeCC(label: String): Double = {
+      def timeCC(label: String, cc: => DataFrame): Double = {
         val t0 = System.nanoTime()
-        val rows = graft.operators.ConnectedComponents.minLabelPropagation(ccEdges).count()
+        val rows = cc.count()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"[stress] cc_$label%-25s ${sec}%8.2f s  rows=$rows (pairs=$nPairs)")
         sec
       }
-      val ccAdaptive = timeCC("adaptive")
-      sys.props("graft.cc.driverFallbackEdges") = "0"
-      val ccForced =
-        try timeCC("forced_distributed")
-        finally sys.props.remove("graft.cc.driverFallbackEdges")
+      import graft.operators.ConnectedComponents.minLabelPropagation
+      val ccAdaptive = timeCC("adaptive", minLabelPropagation(ccEdges))
+      val ccForced = timeCC("forced_distributed",
+        minLabelPropagation(ccEdges, driverFallbackEdges = 0L))
       println(f"[stress] cc forced/adaptive ratio ${ccForced / ccAdaptive}%.2fx")
       ccEdges.unpersist()
     }
     spark.stop()
+    RegistryRunner.exitIfFailed(results.result())
   }
 }

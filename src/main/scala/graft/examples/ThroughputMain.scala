@@ -110,23 +110,21 @@ object ThroughputMain {
     // BENCH_r{N}).
     val round = {
       import scala.jdk.CollectionConverters._
-      val rs = try java.nio.file.Files.list(java.nio.file.Paths.get(".")).iterator().asScala
+      val rs = java.nio.file.Files.list(java.nio.file.Paths.get(".")).iterator().asScala
         .map(_.getFileName.toString)
         .collect { case s if s.matches("BENCH_r\\d+\\.json") =>
           s.stripPrefix("BENCH_r").stripSuffix(".json").toInt }
         .toSeq
-      catch { case _: Throwable => Seq.empty[Int] }
       if (rs.isEmpty) 0 else rs.max + 1
     }
     val json =
       f"""{"metric":"streaming_throughput","unit":"msgs_per_sec","messages":$total,"cpus":"$cpus","passthrough":$passPerSec%.0f,"wordcount":$wcPerSec%.0f,"words_per_sec":$wordsPerSec%.0f}"""
     println(json)
+    spark.stop()
+    // after the stop, so a failed write's exception ends the JVM
     if (args.isEmpty)
-      try java.nio.file.Files.write(
+      java.nio.file.Files.write(
         java.nio.file.Paths.get(f"THROUGHPUT_r$round%02d.json"),
         (json + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-
-    spark.stop()
   }
 }

@@ -53,19 +53,13 @@ object ConnectedComponents {
     *        default is 1M, not 4M; above it the distributed loop's
     *        per-round cost amortizes anyway. The
     *        expensive stage (pair GENERATION) is untouched and stays
-    *        fully distributed either way. The system property
-    *        `graft.cc.driverFallbackEdges` overrides the threshold
-    *        process-wide (stress harnesses set it to 0 to time the
-    *        distributed loop on graphs the fallback would absorb).
+    *        fully distributed either way. 0 forces the distributed loop.
     * @return ("node", "comp") — comp is the min node id reachable;
     *         only nodes appearing in `edges` are labeled (singletons
     *         are their own component by definition and need no pass)
     */
   def minLabelPropagation(edges: DataFrame, maxIter: Int = 20,
       driverFallbackEdges: Long = 1000000L): DataFrame = {
-    val fallbackEdges = sys.props.get("graft.cc.driverFallbackEdges")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(driverFallbackEdges)
     val Seq(srcCol, dstCol) = edges.columns.toSeq.take(2)
     // Undirect via explode, NOT union(reversed): a union plans the edge
     // subtree twice, and when the edge list is itself an expensive pair
@@ -83,7 +77,7 @@ object ConnectedComponents {
     val directedCount = und.count()
     val longIds = edges.schema.take(2)
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && directedCount <= fallbackEdges) {
+    if (longIds && directedCount <= driverFallbackEdges) {
       val spark = edges.sparkSession
       import spark.implicits._
       // Collect as packed primitive arrays — one Array[Long] per

@@ -142,6 +142,11 @@ final class PipelineStatsListener(
   import PipelineStats._
 
   private val stats = TrieMap[String, QueryStats]()
+  // query id → stats key (its name, else its id): QueryTerminatedEvent
+  // carries no name, and an unnamed query's name is null
+  private val keys = TrieMap[java.util.UUID, String]()
+  private def key(id: java.util.UUID, name: String): String =
+    keys.getOrElseUpdate(id, Option(name).getOrElse(id.toString))
 
   def snapshot: Map[String, QueryStats] = stats.toMap
 
@@ -171,12 +176,13 @@ final class PipelineStatsListener(
   }
 
   override def onQueryStarted(e: QueryStartedEvent): Unit = {
-    stats.putIfAbsent(e.name, QueryStats(e.name))
+    val k = key(e.id, e.name)
+    stats.putIfAbsent(k, QueryStats(k))
   }
 
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
     val p = e.progress
-    val name = Option(p.name).getOrElse(p.id.toString)
+    val name = key(p.id, p.name)
     val rows = p.numInputRows
     val durMs = Option(p.durationMs.get("triggerExecution")).map(_.toLong).getOrElse(0L)
     // Per-source behind-the-head lag: for numeric-offset sources
@@ -242,10 +248,11 @@ final class PipelineStatsListener(
     }
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+    val name = keys.remove(e.id).getOrElse(e.id.toString)
     e.exception.foreach { err =>
       val minute = clockMinute() % 60
-      stats.updateWith(e.id.toString) { prev =>
-        val s = prev.getOrElse(QueryStats(e.id.toString))
+      stats.updateWith(name) { prev =>
+        val s = prev.getOrElse(QueryStats(name))
         val bucket = s.histogram.getOrElse(minute, MinuteBucket())
         Some(s.copy(failed = s.failed + 1,
           lastSeenMs = clockMs(), // the error bucket is fresh activity too

@@ -16,20 +16,4 @@ class SessionSettingsSpec extends SparkSpecBase {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
     assert(spark.sparkContext.defaultParallelism === 4)
   }
-
-  test("releaseCaches leaves no Dataset cache and no persisted or checkpointed RDD") {
-    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    val ds = spark.range(1000).selectExpr("id", "id % 7 AS k").persist()
-    assert(ds.count() === 1000L)
-    val rdd = spark.sparkContext.parallelize(1 to 1000, 4).map(_ * 2).localCheckpoint()
-    assert(rdd.count() === 1000L)
-    assert(spark.sparkContext.getPersistentRDDs.size >= 2)
-    assert(!cacheManager.isEmpty)
-
-    SessionTuning.releaseCaches(spark)
-
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    assert(cacheManager.isEmpty)
-  }
 }

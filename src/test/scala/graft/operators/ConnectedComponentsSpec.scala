@@ -57,26 +57,22 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     assert(run(directed - 1) == expected) // just over: distributed loop
   }
 
-  test("graft.cc.driverFallbackEdges system property overrides the threshold") {
+  test("threshold 0 forces the distributed loop") {
     import spark.implicits._
     val df = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    sys.props("graft.cc.driverFallbackEdges") = "0"
-    try {
-      // threshold argument says driver path, but the property forces the
-      // distributed loop. Proof the loop actually ran: with maxIter=0 the
-      // distributed path stops at the SEED labels (comp = min(node, min
-      // neighbor)), which for the 1-2-3 chain leaves node 3 at 2 — the
-      // driver union-find ignores maxIter and would return 1.
-      val seeded = ConnectedComponents.minLabelPropagation(
-          df, maxIter = 0, driverFallbackEdges = Long.MaxValue)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(seeded == Map(1L -> 1L, 2L -> 1L, 3L -> 2L),
-        "expected seed-only labels: the distributed path was not taken")
-      // and with the default maxIter it converges to the true components
-      val comps = ConnectedComponents.minLabelPropagation(df, driverFallbackEdges = Long.MaxValue)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-    } finally sys.props.remove("graft.cc.driverFallbackEdges")
+    // Proof the loop actually ran: with maxIter=0 the distributed path
+    // stops at the SEED labels (comp = min(node, min neighbor)), which
+    // for the 1-2-3 chain leaves node 3 at 2 — the driver union-find
+    // ignores maxIter and would return 1.
+    val seeded = ConnectedComponents.minLabelPropagation(
+        df, maxIter = 0, driverFallbackEdges = 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(seeded == Map(1L -> 1L, 2L -> 1L, 3L -> 2L),
+      "expected seed-only labels: the distributed path was not taken")
+    // and with the default maxIter it converges to the true components
+    val comps = ConnectedComponents.minLabelPropagation(df, driverFallbackEdges = 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
   test("random graphs match a union-find reference") {

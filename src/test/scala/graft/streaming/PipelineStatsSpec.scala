@@ -55,6 +55,39 @@ class PipelineStatsSpec extends SparkSpecBase {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("a failed named query marks its own row; an unnamed query keys by its id") {
+    val listener = new PipelineStatsListener(() => 30)
+    spark.streams.addListener(listener)
+    val unnamedIn = MemoryStream[Int](spark, 1)
+    val unnamed = unnamedIn.toDF().writeStream.format("noop").start()
+    try {
+      val input = MemoryStream[Int](spark, 1)
+      val q = input.toDF().writeStream.queryName("stats_fails")
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          throw new IllegalStateException("planted sink failure")
+        }.start()
+      input.addData(1, 2)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+      unnamedIn.addData(3)
+      unnamed.processAllAvailable()
+      pollUntil("the failure and the unnamed query's progress reach the listener", 10000L) {
+        listener.snapshot.get("stats_fails").exists(_.failed == 1) &&
+          listener.snapshot.get(unnamed.id.toString).exists(_.processed == 1)
+      }
+      val s = listener.snapshot("stats_fails")
+      assert(s.state(30) == "failing")
+      assert(s.failures.map(_.error).exists(_.contains("planted sink failure")))
+      assert(!listener.snapshot.contains(q.id.toString), "failure landed on an id row")
+      assert(!listener.snapshot.contains(null), "unnamed query stored under a null key")
+      val rows = org.json4s.jackson.JsonMethods.parse(listener.snapshotJson).children
+      val rowNames = rows.map(r => (r \ "name").values)
+      assert(rowNames.contains("stats_fails") && rowNames.contains(unnamed.id.toString), rowNames)
+    } finally {
+      unnamed.stop()
+      spark.streams.removeListener(listener)
+    }
+  }
+
   test("minuteSeries zeroes buckets aliased by an idle gap (no fabricated last hour)") {
     import PipelineStats._
     // every wrap-around slot holds hour-old data; the query last saw
