@@ -21,18 +21,6 @@ import scala.util.control.NonFatal
   * re-measured with `SPARK_GRAFT_QUERIES=qNN` or [[graft.ProfileMain]].
   */
 object Bench {
-  /** The near-dup-graph family: every member's plan embeds the SAME
-    * canonical pair relation (`Dedup.allPairsJaccard(_, _, 0.5)` — see
-    * Curation7.pairs scaladoc). Bench primes that relation (persist +
-    * eager count, untimed-but-reported) before the family block so the
-    * timed number measures each member's own work over a warm family
-    * build. */
-  private val PairFamily = Set(
-    "q84_dup_clusters", "q89_curation_pipeline", "q100_allpairs_jaccard",
-    "q136_canonical_docs", "q138_cluster_split", "q139_dup_graph_triangles",
-    "q146_pagerank", "q158_incremental_cc", "q159_threshold_sweep",
-    "q196_neardup_purge_apply")
-
   private def f3(v: Double): String =
     BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
@@ -48,16 +36,14 @@ object Bench {
     * compact headline (~400 B) is printed first and last so a capture of
     * either end of stdout keeps a whole parseable object; the big line
     * and the files carry the per-query record. */
-  private[graft] final case class Suite(sfDir: String, cpus: String, timed: Seq[Timed],
-      familyPrimeSec: Double, familyPrimes: Int) {
+  private[graft] final case class Suite(sfDir: String, cpus: String, timed: Seq[Timed]) {
     private def ok: Seq[Timed] = timed.filter(_.err.isEmpty)
     def nFailed: Int = timed.size - ok.size
     def total: Double = ok.map(_.sec).sum
 
     private def head: String =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir"""" +
-        s""","n_queries":${timed.size},"n_failed":$nFailed,"gc_sec":${f3(timed.map(_.gcMs).sum / 1000.0)}""" +
-        s""","family_prime_sec":${f3(familyPrimeSec)},"family_primes":$familyPrimes"""
+        s""","n_queries":${timed.size},"n_failed":$nFailed,"gc_sec":${f3(timed.map(_.gcMs).sum / 1000.0)}"""
     private def env: String = {
       val rt = Runtime.getRuntime
       s""""env":{"driver_mem":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "default")}"""" +
@@ -89,68 +75,13 @@ object Bench {
         queries(_.name, q => q.err.fold(f3(q.sec))(errObject)) + "}"
   }
 
-  /** Times `selected` on `spark`: non-family queries each under
-    * the full sweep, then the pair family as one contiguous block over
-    * one prime. */
+  /** Times `selected` on `spark`, each query built, counted and swept
+    * on its own, in name order. */
   private[graft] def timeSuite(spark: SparkSession, sfDir: String, cpus: String,
-      selected: Seq[(String, (SparkSession, String) => DataFrame)]): Suite = {
-    // Family prime: the near-dup-graph queries all derive from the ONE
-    // canonical pair relation allPairsJaccard(0.5). Spark's cache
-    // manager keys on the canonicalized plan, so persisting and counting
-    // that relation substitutes an InMemoryRelation for the whole
-    // prefix-filtered pair build inside each family query's own plan —
-    // the timed number then measures the query's OWN work (CC, PageRank,
-    // census, split). The family runs as a CONTIGUOUS BLOCK over one
-    // prime: its members get a light sweep that unpersists everything
-    // EXCEPT the family cache, so members still can't leak blocks into
-    // each other while the shared build survives the block. The prime is
-    // untimed but reported (family_prime_sec / family_primes).
-    val (famSelected, restSelected) =
-      selected.partition(p => PairFamily.contains(p._1))
-    val restResults =
-      restSelected.map { case (name, fn) => RegistryRunner.run(spark, sfDir, name, fn, _.count()) }
-    val (famResults, familyPrimeSec) =
-      if (famSelected.isEmpty) (Seq.empty[Timed], 0.0)
-      else {
-        // A prime failure degrades to "family queries run unprimed" (and
-        // records the attempt's wall cost); it never aborts the whole
-        // bench.
-        val t0 = System.nanoTime()
-        try graft.queries.Dedup.allPairsJaccard(spark, sfDir, 0.5)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          .count()
-        catch { case NonFatal(_) => () }
-        val primeSec = (System.nanoTime() - t0) / 1e9
-        // everything persisted at this instant IS the family cache
-        // (pairs + the shingled corpus + the prefix relation it rides):
-        // snapshot BOTH the RDD ids and the CacheManager entry
-        // identities, because the two layers leak independently — a
-        // member's internal Dataset.persist leaves a CacheManager ENTRY
-        // that an RDD-only sweep turns into a dead substitution target
-        // (recomputes without caching, and the next member's own
-        // persist of the same plan no-ops as "already cached"), while
-        // localCheckpoint blocks live only at the RDD layer.
-        val familyRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        val familyEntries = org.apache.spark.sql.graftbridge.ColumnBridge
-          .cachedEntryRefs(spark)
-        def famSweep(): Unit = {
-          org.apache.spark.sql.graftbridge.ColumnBridge
-            .uncacheEntriesExcept(spark, familyEntries)
-          spark.sparkContext.getPersistentRDDs
-            .filter { case (id, _) => !familyRdds.contains(id) }
-            .values.foreach(_.unpersist(blocking = true))
-          System.gc()
-        }
-        val rs = famSelected.map { case (name, fn) =>
-          RegistryRunner.run(spark, sfDir, name, fn, _.count(), _ => famSweep())
-        }
-        RegistryRunner.sweep(spark) // full sweep once the block is done
-        (rs, primeSec)
-      }
-    // name order keeps the artifacts deterministic
-    Suite(sfDir, cpus, (restResults ++ famResults).sortBy(_.name),
-      familyPrimeSec, familyPrimes = if (famSelected.isEmpty) 0 else 1)
-  }
+      selected: Seq[(String, (SparkSession, String) => DataFrame)]): Suite =
+    Suite(sfDir, cpus, selected.map { case (name, fn) =>
+      RegistryRunner.run(spark, sfDir, name, fn, _.count())
+    })
 
   /** Stdout is headline, big line, headline: `stop` runs before the last
     * print, so nothing (not even a stdout log appender) can follow it —

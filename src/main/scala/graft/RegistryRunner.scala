@@ -36,8 +36,7 @@ object RegistryRunner {
     * `sweep`s untimed. NonFatal only: a fatal error (OOM, linkage) ends
     * the run instead of reading as one failed query. */
   def run(spark: SparkSession, sfDir: String, name: String,
-      fn: (SparkSession, String) => DataFrame, action: DataFrame => Unit,
-      sweep: SparkSession => Unit = RegistryRunner.sweep): Timed = {
+      fn: (SparkSession, String) => DataFrame, action: DataFrame => Unit): Timed = {
     val gc0 = gcMillis()
     val t0 = System.nanoTime()
     val err =

@@ -230,18 +230,16 @@ object Curation14 {
     val c = h.select(col("source"), col("l"),
       sum(col("ca")).over(wCum).as("cuma"), sum(col("cb")).over(wCum).as("cumb"),
       sum(col("ca")).over(wAll).as("na"), sum(col("cb")).over(wAll).as("nb"))
-    // r19: dRel is HISTOGRAM-grain (sources × distinct lengths — a few
-    // thousand rows) but referenced twice (the per-source max aggregate
-    // AND the argmin equality join), and column pruning specializes the
-    // two references' subtrees so ReuseExchange cannot serve them (the
-    // r17 lesson) — each re-ran both corpus scans (plan census
-    // leaves[documents=4]). Persisting the tiny relation halves the
-    // corpus scans; values untouched.
+    // dRel is referenced twice (the per-source max aggregate AND the
+    // argmin equality join), so each reference re-runs both corpus scans
+    // (plan census leaves[documents=4]). A persist of the tiny histogram
+    // halved the scans but did not measure faster, warmed: 1.11 s with
+    // it against 1.01 s without (sf0.1, 4 cores, medians of 10
+    // interleaved pairs, faster in 2 of 10), so it is gone.
     val dRel = c.where(col("na") > 0 && col("nb") > 0)
       .select(col("source"), col("l"), col("na"), col("nb"),
         abs(col("cuma").cast(DoubleType) / col("na") -
           col("cumb").cast(DoubleType) / col("nb")).as("dv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val g = dRel.groupBy("source")
       .agg(max(col("na")).cast(LongType).as("n_a"),
         max(col("nb")).cast(LongType).as("n_b"), max(col("dv")).as("ks"))
@@ -297,15 +295,15 @@ object Curation14 {
         coalesce(col("ltext"), col("text")).as("content"))
     val keep = docs.where(!adoptSet)
       .select(col("doc_id"), col("source"), col("text").as("content"))
-    // r19: f is doc-grain but TEXT-FREE (fp, split — ~40 B/doc), and
-    // both the straddle census and the verdict join consume it; without
-    // the persist each reference re-planned the 3-scan union (leaders +
-    // adopt + keep: census read leaves[documents=6]). One pass builds
-    // the fingerprints, both branches read the cache.
+    // f feeds both the straddle census and the verdict join, so each
+    // reference re-plans the 3-scan union (leaders + adopt + keep:
+    // census leaves[documents=6]). A persist of the text-free (fp, split)
+    // relation halved the scans but did not measure faster, warmed:
+    // 0.88 s with it against 0.88 s without (sf0.1, 4 cores, medians of
+    // 10 interleaved pairs, faster in 6 of 10), so it is gone.
     val f = adopt.unionAll(keep)
       .select(md5(col("content")).as("fp"),
         Curation13.splitCol(col("doc_id"), col("source")).as("split"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val gm = f.select("fp", "split").distinct()
       .groupBy("fp").agg(count(lit(1)).as("ns"))
     f.join(gm, Seq("fp"))

@@ -211,21 +211,15 @@ object Curation2 {
         size(split(col("text"), " ")).cast("long").as("n"),
         crossHash60(col("doc_id")).as("h"))
       .withColumn("bucket", pmod(col("h"), lit(B)))
-    // r19: ONE (lang, bucket) aggregate feeds EVERYTHING lang-grain.
-    // Previously the budget chain (perLang → tot → sq → z → budgets)
-    // re-derived from `base`, and every cross-join re-reference
-    // re-planned the whole corpus scan+split subtree — plan census read
-    // leaves[documents=6]. bucketTotals is langs×32 rows; persisting it
-    // (trivial at any scale) caps the query at TWO corpus scans: this
-    // aggregate and the final windowed pass. perLang is its rollup —
-    // Σ over buckets of per-bucket integer sums is the same Σ(n).
-    // (A doc-grain `base` persist was also tried: interleaved probes
-    // read 1.50/1.59 s vs 1.30/1.34 s on the prior tree — the cache
-    // materialization costs more than the column-pruned re-scans it
-    // saves; the tiny-aggregate persist keeps the scan-count win
-    // without a corpus-sized cache.)
+    // ONE (lang, bucket) aggregate feeds everything lang-grain: perLang
+    // is its rollup (Σ over buckets of per-bucket integer sums is the
+    // same Σ(n)). Each of its references re-plans the corpus scan+split
+    // subtree. A persist of this langs×32 aggregate measured slower than
+    // those column-pruned re-scans, warmed: 1.90 s with it against 1.52 s
+    // without at sf0.1 and 1.95 s against 1.85 s at 10× (4 cores,
+    // medians of 10 interleaved pairs, faster in 0 and 2 of 10). A
+    // doc-grain `base` persist was slower too.
     val bucketTotals = base.groupBy("lang", "bucket").agg(sum(col("n")).as("bt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val perLang = bucketTotals.groupBy("lang").agg(sum(col("bt")).cast("long").as("lt"))
     val tot = perLang.agg(sum(col("lt")).cast("long").as("tot"))
     val sq = perLang.crossJoin(broadcast(tot))

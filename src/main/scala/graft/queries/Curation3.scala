@@ -22,11 +22,10 @@ object Curation3 {
   private def q(name: String, oracle: String)(f: (SparkSession, String) => DataFrame) =
     GraftQuery(name, f, Some(oracle))
 
-  /** q110 prefix-sum bucket count — the packing's parallelism. Sized to
-    * cluster task slots, not fixed: 1024 spreads the per-bucket sort
-    * over 1024 tasks at any scale while the bucket-offset window still
-    * only sees ≤1024 aggregate rows. */
-  val PackBuckets: Int = sys.env.getOrElse("GRAFT_PACK_BUCKETS", "1024").toInt
+  /** q110 prefix-sum bucket count — the packing's parallelism: 1024
+    * spreads the per-bucket sort over 1024 tasks at any scale while the
+    * bucket-offset window still only sees ≤1024 aggregate rows. */
+  val PackBuckets: Int = 1024
 
   // -- q110: fixed-length sequence packing (split docs, no padding) -----
   // The last step before a pretraining run: concatenate the corpus in a
@@ -43,12 +42,11 @@ object Curation3 {
   // (ceil(n/L)+1 max), so output ≈ corpus tokens / L plus one row per
   // boundary crossing. All arithmetic is integer.
   //
-  // B (bucket count = prefix-sum parallelism) scales with the cluster:
-  // each bucket sorts ~corpus/B docs in one task, so B should be ≥ the
-  // cluster's task slots. Env-overridable (GRAFT_PACK_BUCKETS); the
-  // oracle interpolates the same value, and the PACKING ITSELF depends
-  // on B (bucket is the major sort key), so Spark and oracle always
-  // agree for any choice.
+  // B (bucket count = prefix-sum parallelism): each bucket sorts
+  // ~corpus/B docs in one task, so B should be ≥ the cluster's task
+  // slots. The oracle interpolates the same value, and the PACKING
+  // ITSELF depends on B (bucket is the major sort key), so Spark and
+  // oracle agree for any choice.
   val q110 = q("q110_sequence_pack",
     s"""WITH d AS (SELECT doc_id,
       |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n,

@@ -237,8 +237,8 @@ object Curation4 {
   // cutover (web-scale ~10^7-word vocabs) the loop runs as 10 bounded
   // Spark jobs over the persisted dict. Identical semantics (Java
   // String.replace = Spark replace = DuckDB replace on the disjoint-
-  // match encoding); a Bpe spec compares the paths, and
-  // -Dgraft.bpe.driverFallbackWords=0 forces the distributed loop.
+  // match encoding); BpeSpec compares the paths, forcing the
+  // distributed loop with bpeTrainedDict's driverFallbackWords = 0.
   private val BpeIters = 10
 
   /** Driver-local BPE training loop over a collected (word, padded, n)
@@ -282,9 +282,10 @@ object Curation4 {
   /** Train BPE over the corpus vocabulary (size-adaptive loop) and
     * return (merge sequence, trained token map). The token map —
     * (word, n_tok) with n_tok = symbol count under the learned merges —
-    * is the tokenizer artifact q128 applies back to the corpus. */
-  private[graft] def bpeTrainedDict(s: SparkSession, dir: String)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
+    * is the tokenizer artifact q128 applies back to the corpus.
+    * `driverFallbackWords` is the vocabulary-size cutover. */
+  private[graft] def bpeTrainedDict(s: SparkSession, dir: String,
+      driverFallbackWords: Int = 100000): (Seq[(Int, String, String, Long)], DataFrame) = {
     import s.implicits._
     val chars = transform(sequence(lit(1), length(col("word"))),
       i => col("word").substr(i, lit(1)))
@@ -295,12 +296,10 @@ object Curation4 {
       .select(col("word"),
         concat(lit(" "), array_join(chars, "  "), lit(" ")).as("w"), col("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cutover = sys.props.get("graft.bpe.driverFallbackWords")
-      .map(_.toInt).getOrElse(100000)
     // one bounded probe job: ≤ cutover+1 rows decide the path (and
     // materialize the cache the distributed path would reuse)
-    val head = base.limit(cutover + 1).as[(String, String, Long)].collect()
-    if (head.length <= cutover) {
+    val head = base.limit(driverFallbackWords + 1).as[(String, String, Long)].collect()
+    if (head.length <= driverFallbackWords) {
       val (merges, dictF) = bpeTrainLocal(head, BpeIters)
       val tok = dictF.map { case (word, w, _) =>
         (word, w.trim.split("  ").length.toLong) }.toSeq.toDF("word", "n_tok")

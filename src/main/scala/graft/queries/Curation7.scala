@@ -47,9 +47,9 @@ object Curation7 {
       |            CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE) >= 0.5)""".stripMargin
 
   /** The near-dup edge set (a_id < b_id) at threshold 0.5 — one
-    * prefix-filtered build, shared (via Spark's canonicalized-plan cache
-    * keying inside allPairsJaccard) with q84/q89/q100/q136. */
-  private def dupEdges(s: SparkSession, dir: String): DataFrame =
+    * prefix-filtered build per query; its persists inside
+    * allPairsJaccard serve every reference in that query's plan. */
+  private[graft] def dupEdges(s: SparkSession, dir: String): DataFrame =
     Dedup.allPairsJaccard(s, dir, 0.5).select(col("a_id"), col("b_id"))
 
   // -- q138: cluster-aware leakage-free train/val/test split ------------
@@ -152,8 +152,10 @@ object Curation7 {
     * (Curation7Spec replays random graphs through both paths). Above
     * the cutover the distributed Schank-Wagner plan runs: max
     * out-degree under (deg, id) orientation is O(√m), so wedge fan-out
-    * stays bounded on skewed graphs. */
-  private[graft] def triangleCensus(edges: DataFrame): DataFrame = {
+    * stays bounded on skewed graphs. `driverFallbackEdges` is that
+    * cutover; 0 forces the distributed plan. */
+  private[graft] def triangleCensus(edges: DataFrame,
+      driverFallbackEdges: Long = 1000000L): DataFrame = {
     val und = edges
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Eager materialization (the q84/q146 discipline): the census job
@@ -164,9 +166,7 @@ object Curation7 {
     // plan. One count() up front pins it; everything downstream reads
     // edge-cache-sized input. The count doubles as the fallback gate.
     val m = und.count()
-    val fallbackEdges = sys.props.get("graft.tri.driverFallbackEdges")
-      .flatMap(x => scala.util.Try(x.toLong).toOption).getOrElse(1000000L)
-    if (m <= fallbackEdges) {
+    if (m <= driverFallbackEdges) {
       // 16 B/edge packed collect (the ConnectedComponents discipline)
       val parts: Array[Array[Long]] = und.queryExecution.toRdd
         .mapPartitions { it =>

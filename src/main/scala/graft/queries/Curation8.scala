@@ -150,7 +150,16 @@ object Curation8 {
        |r0 AS (SELECT node, $PrScale // (SELECT NULLIF(n, 0) FROM nn) AS r FROM deg),
        |${(1 to 8).map(prIterSql).mkString(",\n")}
        |SELECT node, CAST(r AS BIGINT) AS score FROM r8
-       |ORDER BY score DESC, node LIMIT 20""".stripMargin) { (s, dir) =>
+       |ORDER BY score DESC, node LIMIT 20""".stripMargin) {
+    (s, dir) => pageRank(s, dir)
+  }
+
+  /** q146's body. `driverFallbackEdges` is the size-adaptive cutover: at
+    * most this many directed edges run the 8 rounds on the driver, and 0
+    * forces the distributed loop. `cacheGraceMs` is the wall-clock grace
+    * before the loop caches' release fallback may fire. */
+  private[graft] def pageRank(s: SparkSession, dir: String,
+      driverFallbackEdges: Long = 1000000L, cacheGraceMs: Long = 60000L): DataFrame = {
     import s.implicits._
     // Undirect via explode, not union(reversed): a union plans the
     // prefix-filtered pair join twice (the q84 CC lesson) — one scan,
@@ -161,11 +170,9 @@ object Curation8 {
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val m = und.count() // materializes the persist AND picks the path
-    val fallbackEdges = sys.props.get("graft.pr.driverFallbackEdges")
-      .flatMap(x => scala.util.Try(x.toLong).toOption).getOrElse(1000000L)
     if (m == 0) {
       und.select(col("u").as("node"), lit(0L).as("score")).where(lit(false))
-    } else if (m <= fallbackEdges) {
+    } else if (m <= driverFallbackEdges) {
       // Size-adaptive driver fallback (the ConnectedComponents
       // discipline, same 16 B/directed-edge packed collect and the same
       // 1M cutover): 8 rounds over ≤1M edges is ~10⁷ integer ops — far
@@ -255,11 +262,9 @@ object Curation8 {
         private val unrelated = new java.util.concurrent.atomic.AtomicInteger(0)
         private val UnrelatedGrace = 3
         // fallback arms only after BOTH a count of unrelated executions
-        // AND this wall-clock grace — counting alone would release a
+        // AND the wall-clock grace — counting alone would release a
         // deferred-materialization caller's caches after 3 quick
-        // queries (prop override is for the specs)
-        private val graceMs =
-          sys.props.get("graft.pr.cacheGraceMs").map(_.toLong).getOrElse(60000L)
+        // queries
         private val armedAtMs = System.currentTimeMillis()
         private def fire(): Unit = if (done.compareAndSet(false, true)) {
           caches.foreach(_.unpersist())
@@ -270,7 +275,7 @@ object Curation8 {
             try qe.analyzed.exists(p => (p eq target) || p.sameResult(target))
             catch { case scala.util.control.NonFatal(_) => false }
           if (isHead || (unrelated.incrementAndGet() >= UnrelatedGrace &&
-              System.currentTimeMillis() - armedAtMs >= graceMs)) fire()
+              System.currentTimeMillis() - armedAtMs >= cacheGraceMs)) fire()
         }
         override def onSuccess(funcName: String,
             qe: org.apache.spark.sql.execution.QueryExecution,

@@ -257,8 +257,8 @@ object Dedup {
     * streams across reducers instead. */
   private val IntraExplodeCap = 1024
 
-  /** Persist + EAGER materialization (the family-prime/q139 eager-count
-    * discipline at generator scope) for the multi-referenced kernel
+  /** Persist + EAGER materialization (the q139 eager-count discipline
+    * at generator scope) for the multi-referenced kernel
     * relations. Why a cache and not an exchange-reuse barrier: column
     * pruning specializes every reference's exchange to its own column
     * set, so "identical" subtrees canonicalize differently and
@@ -466,7 +466,8 @@ object Dedup {
     // The shingled corpus appears four times in this plan (df count,
     // prefix build, both verify sides): persist it so one action
     // computes it once. Spark's cache manager keys on the canonicalized
-    // plan, so the identical subtree in q84/q89/q100 shares ONE entry.
+    // plan, so an identical subtree elsewhere in the same query shares
+    // ONE entry (the sweep after each query drops it).
     // At cluster scale this is the standard "materialize the prepared
     // corpus once" step (MEMORY_AND_DISK spills, never OOMs).
     val d = d0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
+import org.json4s._
 import java.util.concurrent.ConcurrentHashMap
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -129,6 +130,28 @@ object PipelineStats {
       } else if (batchDurationsMs.lastOption.exists(_ > 10000)) "busy"
       else "available"
   }
+
+  /** One query's `/api/status/` row, in key order. Latencies carry one
+    * decimal whatever the JVM locale. [[StatsServer.detailJson]] builds
+    * the detail object from this row. */
+  private[streaming] def statusRow(s: QueryStats, nowMinute: Int, nowMs: Long): List[JField] = {
+    def f1(v: Double) = JDecimal(BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP))
+    val minutes = s.minuteSeries(nowMinute, nowMs)
+    List(
+      "name" -> JString(s.name),
+      "processed" -> JInt(s.processed), "success" -> JInt(s.success),
+      "failed" -> JInt(s.failed), "waiting" -> JInt(s.waiting),
+      "peak_waiting" -> JInt(s.peakWaiting),
+      "behind_latest" -> JObject(s.sourceLag.toList.sortBy(_._1).map { case (k, l) => k -> JInt(l) }),
+      "avg_time_taken_ms" -> f1(s.avgTimeTakenMs), "95_percentile_ms" -> f1(s.p95TimeTakenMs),
+      "minutes_processed" -> JArray(minutes.map(b => JInt(b.processedCount)).toList),
+      "minutes_errors" -> JArray(minutes.map(b => JInt(b.errorCount)).toList),
+      "status" -> JString(s.state(nowMinute)))
+  }
+
+  /** Compact JSON: json4s escapes every control character. */
+  private[streaming] def render(v: JValue): String =
+    org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(v))
 }
 
 /** Listener wiring: one `QueryProgressEvent` per micro-batch carries
@@ -154,25 +177,10 @@ final class PipelineStatsListener(
     * `motorway/webserver.py:105-148`): per-query counts, latency stats,
     * and the `available|busy` status heuristic. */
   def snapshotJson: String = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    // locale-pinned decimals: the f-interpolator's %.1f follows the JVM
-    // default locale, and a comma decimal ("12,3") is invalid JSON —
-    // the dashboard's live poller would silently stop updating
-    def f1(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
     val nowMinute = clockMinute() % 60
     val nowMs = clockMs()
-    snapshot.toSeq.sortBy(_._1).map { case (name, s) =>
-      val lag = s.sourceLag.toSeq.sortBy(_._1)
-        .map { case (src, l) => s""""${esc(src)}":$l""" }.mkString("{", ",", "}")
-      val minutes = s.minuteSeries(nowMinute, nowMs)
-      s"""{"name":"${esc(name)}","processed":${s.processed},"success":${s.success},""" +
-        s""""failed":${s.failed},"waiting":${s.waiting},"peak_waiting":${s.peakWaiting},""" +
-        s""""behind_latest":$lag,""" +
-        s""""avg_time_taken_ms":${f1(s.avgTimeTakenMs)},"95_percentile_ms":${f1(s.p95TimeTakenMs)},""" +
-        s""""minutes_processed":${minutes.map(_.processedCount).mkString("[", ",", "]")},""" +
-        s""""minutes_errors":${minutes.map(_.errorCount).mkString("[", ",", "]")},""" +
-        s""""status":"${s.state(nowMinute)}"}"""
-    }.mkString("[", ",", "]")
+    render(JArray(snapshot.toSeq.sortBy(_._1)
+      .map { case (_, s) => JObject(statusRow(s, nowMinute, nowMs)) }.toList))
   }
 
   override def onQueryStarted(e: QueryStartedEvent): Unit = {

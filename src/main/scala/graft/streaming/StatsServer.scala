@@ -92,7 +92,7 @@ final class StatsServer(listener: PipelineStatsListener, port: Int = 0) {
 object StatsServer {
   /** Locale-independent "%.1f" — the f-interpolator uses the JVM
     * default locale, which can emit comma decimals ("12,3") and break
-    * the JSON endpoints on non-English hosts. */
+    * the sparkline coordinates on non-English hosts. */
   private def f1(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
 
@@ -226,25 +226,20 @@ object StatsServer {
     * serves JSON to its bundled UI (`motorway/webserver.py:53-64`);
     * same fields here for programmatic consumers. */
   private[streaming] def detailJson(s: PipelineStats.QueryStats): String = {
-    def esc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
+    import org.json4s._
     val nowMinute = PipelineStatsListener.wallClockMinute() % 60
-    val lag = s.sourceLag.toSeq.sortBy(_._1)
-      .map { case (src, l) => s""""${esc(src)}":$l""" }.mkString("{", ",", "}")
-    val failures = s.failures.reverse.map { f =>
-      s"""{"timestamp":"${java.time.Instant.ofEpochMilli(f.timestampMs)}"""" +
-        s""","message_id":"${esc(f.messageId)}","error":"${esc(f.error)}"""" +
-        s""","traceback":"${esc(f.traceback)}"}"""
-    }.mkString("[", ",", "]")
-    val minutes = s.minuteSeries(nowMinute, System.currentTimeMillis())
-    s"""{"name":"${esc(s.name)}","status":"${s.state(nowMinute)}"""" +
-      s""","processed":${s.processed},"success":${s.success},"failed":${s.failed}""" +
-      s""","waiting":${s.waiting},"peak_waiting":${s.peakWaiting},"behind_latest":$lag,""" +
-      s""""avg_time_taken_ms":${f1(s.avgTimeTakenMs)},"95_percentile_ms":${f1(s.p95TimeTakenMs)},""" +
-      s""""last_batch_ms":${s.batchDurationsMs.lastOption.getOrElse(0L)}""" +
-      s""","minutes_processed":${minutes.map(_.processedCount).mkString("[", ",", "]")}""" +
-      s""","minutes_errors":${minutes.map(_.errorCount).mkString("[", ",", "]")}""" +
-      s""","failed_messages":$failures}"""
+    val row = PipelineStats.statusRow(s, nowMinute, System.currentTimeMillis())
+    // status moves up behind the name; last_batch_ms goes ahead of the
+    // minute series, failed_messages last
+    val (counts, minutes) = row.init.tail.span(_._1 != "minutes_processed")
+    val failures = JArray(s.failures.reverse.map { f =>
+      JObject("timestamp" -> JString(java.time.Instant.ofEpochMilli(f.timestampMs).toString),
+        "message_id" -> JString(f.messageId), "error" -> JString(f.error),
+        "traceback" -> JString(f.traceback))
+    }.toList)
+    val lastBatch = "last_batch_ms" -> JInt(BigInt(s.batchDurationsMs.lastOption.getOrElse(0L)))
+    PipelineStats.render(JObject(row.head :: row.last :: counts ::: lastBatch :: minutes :::
+      List("failed_messages" -> failures)))
   }
 
   /** Per-query drill-down — parity with the reference's

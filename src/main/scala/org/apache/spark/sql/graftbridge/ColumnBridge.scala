@@ -19,51 +19,6 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Identity snapshot of the session's CacheManager entries — taken
-    * by graft.Bench right after the family prime so the family-block
-    * sweep can distinguish "the shared family cache" from "entries a
-    * family member leaked". The CachedData list is a private field
-    * (reflection through the accessor; single point of contact with
-    * the internal, like everything in this bridge). */
-  def cachedEntryRefs(spark: org.apache.spark.sql.SparkSession): Seq[AnyRef] =
-    cachedData(spark)
-
-  /** Drop every CacheManager ENTRY (and its blocks) not identity-listed
-    * in `keep`. This is the piece `getPersistentRDDs`-level sweeping
-    * cannot do: unpersisting only the RDD under a cache entry leaves a
-    * DEAD entry behind, and a later query whose plan matches it gets an
-    * InMemoryRelation substituted that recomputes without ever caching
-    * — while its own `.persist` no-ops as "already cached". `cascade =
-    * false` because the kept family entries must survive even when a
-    * dropped entry's plan feeds them. */
-  def uncacheEntriesExcept(spark: org.apache.spark.sql.SparkSession,
-      keep: Seq[AnyRef]): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val cm = cs.sharedState.cacheManager
-    // identity first, plan equivalence as the fallback (ADVICE r16): a
-    // recache during the family block (recacheByPlan/refreshByPath)
-    // rebuilds CachedData instances, so an eq-only keep test would
-    // silently sweep the shared family cache and every later family
-    // member would re-time the full pair build.
-    val keepPlans = keep.collect {
-      case cd: org.apache.spark.sql.execution.CachedData => cd.plan
-    }
-    cachedData(spark).foreach { cd =>
-      val plan = cd.asInstanceOf[org.apache.spark.sql.execution.CachedData].plan
-      val kept = keep.exists(_ eq cd) || keepPlans.exists(_.sameResult(plan))
-      if (!kept)
-        cm.uncacheQuery(cs, plan, cascade = false, blocking = true)
-    }
-  }
-
-  private def cachedData(spark: org.apache.spark.sql.SparkSession): Seq[AnyRef] = {
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    val m = cm.getClass.getDeclaredMethod("cachedData")
-    m.setAccessible(true)
-    m.invoke(cm).asInstanceOf[scala.collection.immutable.IndexedSeq[AnyRef]].toSeq
-  }
-
   /** Free the storage of a `localCheckpoint()`ed DataFrame. The blocks
     * live on the backing checkpointed RDD (not in the cache manager),
     * so `Dataset.unpersist()` cannot reach them; iterative drivers that

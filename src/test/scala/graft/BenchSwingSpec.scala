@@ -50,8 +50,7 @@ class BenchSwingSpec extends SparkSpecBase {
     // sbt version sneaks an epilogue back in, the parse must only have
     // to skip trailing non-JSON lines, never reassemble a split object.
     val suite = Bench.Suite("/root/testdata/sf0.1", "32",
-      (1 to 192).map(i => Bench.Timed(f"q$i%03d_query", 0.1 + i / 1000.0, 2, 70, None)),
-      familyPrimeSec = 4.2, familyPrimes = 1)
+      (1 to 192).map(i => Bench.Timed(f"q$i%03d_query", 0.1 + i / 1000.0, 2, 70, None)))
     val ours = emitted(suite)
     assert(ours.length > 2000, "the big line must overflow the capture window")
     assert(lastJson(ours).contains(suite.compact))
@@ -72,7 +71,7 @@ class BenchSwingSpec extends SparkSpecBase {
     val rendered = Bench.Suite("/root/testdata/sf0.1", "8", Seq(
       Bench.Timed("q01_pricing_summary", 0.414, 0, 70, None),
       Bench.Timed("q02_filter_pushdown", 0.2, 0, 70, Some("java.lang.RuntimeException: \"x\"\nat y")),
-      Bench.Timed("q139_triangle_census", 3.933, 28, 83, None)), 0.0, 0).perq
+      Bench.Timed("q139_triangle_census", 3.933, 28, 83, None))).perq
     assertPerqSchema("rendered", rendered)
     new java.io.File(".").listFiles()
       .filter(f => f.getName.matches("bench_perq_last_c\\d+\\.json"))

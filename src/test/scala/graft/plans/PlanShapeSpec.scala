@@ -31,14 +31,13 @@ class PlanShapeSpec extends SparkSpecBase {
   // LogicalRelation here would mean a branch re-running the
   // prefix-filtered pair join instead of reading the cache).
   test("q139 distributed census reads the single persisted pair build, no re-scan") {
-    sys.props("graft.tri.driverFallbackEdges") = "0" // force the distributed path
-    try {
-      val lp = SparkEntry.queries("q139_dup_graph_triangles")(spark, sfDir)
-        .queryExecution.optimizedPlan
-      val leaves = lp.collectLeaves().map(_.getClass.getSimpleName)
-      assert(leaves.nonEmpty && leaves.forall(_ == "InMemoryRelation"),
-        s"census leaves must all be the edge/oriented caches, got: $leaves")
-    } finally sys.props.remove("graft.tri.driverFallbackEdges")
+    // q139's own body with a zero cutover: the distributed path
+    val lp = graft.queries.Curation7.triangleCensus(
+      graft.queries.Curation7.dupEdges(spark, sfDir), driverFallbackEdges = 0L)
+      .queryExecution.optimizedPlan
+    val leaves = lp.collectLeaves().map(_.getClass.getSimpleName)
+    assert(leaves.nonEmpty && leaves.forall(_ == "InMemoryRelation"),
+      s"census leaves must all be the edge/oriented caches, got: $leaves")
   }
 
   // q163's keep set must ride the bounded-heap TopK aggregate, not a
@@ -297,12 +296,10 @@ class PlanShapeSpec extends SparkSpecBase {
   test("q146_pagerank distributed head is TakeOrderedAndProject, not a global sort") {
     // force the distributed loop (the default path collapses the test
     // graph onto the driver under the 1M-edge cutover)
-    sys.props("graft.pr.driverFallbackEdges") = "0"
-    try {
-      val plan = executed("q146_pagerank")
-      assert(plan.contains("TakeOrderedAndProject"),
-        s"q146 top-k did not plan TakeOrderedAndProject:\n$plan")
-    } finally sys.props.remove("graft.pr.driverFallbackEdges")
+    val plan = graft.queries.Curation8.pageRank(spark, sfDir, driverFallbackEdges = 0L)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"),
+      s"q146 top-k did not plan TakeOrderedAndProject:\n$plan")
   }
 
   // q148's only loop join is the broadcast 16-row threshold grid against

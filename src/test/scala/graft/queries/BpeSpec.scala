@@ -38,10 +38,7 @@ class BpeSpec extends SparkSpecBase {
     import spark.implicits._
     val local = Curation4.q126.run(spark, sfDir)
       .as[(Int, String, String, Long)].collect().toSeq
-    sys.props("graft.bpe.driverFallbackWords") = "0"
-    val distributed =
-      try Curation4.q126.run(spark, sfDir).as[(Int, String, String, Long)].collect().toSeq
-      finally sys.props.remove("graft.bpe.driverFallbackWords")
+    val distributed = Curation4.bpeTrainedDict(spark, sfDir, driverFallbackWords = 0)._1
     assert(local == distributed,
       s"cutover paths diverge:\n$local\nvs\n$distributed")
   }

@@ -80,20 +80,17 @@ class Curation7Spec extends SparkSpecBase {
       val wedges = deg.values.map(d => d * (d - 1) / 2).sum
       // both paths of the size-adaptive census: the driver fallback
       // (default — these graphs are tiny) and the distributed
-      // Schank-Wagner plan (forced via the cutover prop) must agree
-      // with brute force AND each other
-      for (cutover <- Seq("1000000", "0")) {
-        sys.props("graft.tri.driverFallbackEdges") = cutover
-        try {
-          val row = Curation7.triangleCensus(edges.toDF("a_id", "b_id")).collect().head
-          assert(row.getLong(0) == deg.size.toLong, s"nodes (cutover=$cutover)")
-          assert(row.getLong(1) == edges.size.toLong, s"edges (cutover=$cutover)")
-          assert(row.getLong(2) == wedges, s"wedges (cutover=$cutover)")
-          assert(row.getLong(3) == tri.toLong,
-            s"triangles: got ${row.getLong(3)} want $tri (cutover=$cutover)")
-          val cc = if (wedges == 0) 0.0 else 3.0 * tri / wedges
-          assert(row.getDouble(4) == cc, s"global_cc (cutover=$cutover)")
-        } finally sys.props.remove("graft.tri.driverFallbackEdges")
+      // Schank-Wagner plan (forced by a zero cutover) must agree with
+      // brute force AND each other
+      for (cutover <- Seq(1000000L, 0L)) {
+        val row = Curation7.triangleCensus(edges.toDF("a_id", "b_id"), cutover).collect().head
+        assert(row.getLong(0) == deg.size.toLong, s"nodes (cutover=$cutover)")
+        assert(row.getLong(1) == edges.size.toLong, s"edges (cutover=$cutover)")
+        assert(row.getLong(2) == wedges, s"wedges (cutover=$cutover)")
+        assert(row.getLong(3) == tri.toLong,
+          s"triangles: got ${row.getLong(3)} want $tri (cutover=$cutover)")
+        val cc = if (wedges == 0) 0.0 else 3.0 * tri / wedges
+        assert(row.getDouble(4) == cc, s"global_cc (cutover=$cutover)")
       }
     }
   }

@@ -90,12 +90,9 @@ class Curation8Spec extends SparkSpecBase {
     assert(got == expected)
     // forced-distributed path must produce the identical ranking — the
     // cutover can never change the answer
-    sys.props("graft.pr.driverFallbackEdges") = "0"
-    try {
-      val dist = Curation8.q146.run(spark, sfDir).collect()
-        .map(r0 => (r0.getLong(0), r0.getLong(1))).toSeq
-      assert(dist == expected)
-    } finally sys.props.remove("graft.pr.driverFallbackEdges")
+    val dist = Curation8.pageRank(spark, sfDir, driverFallbackEdges = 0L).collect()
+      .map(r0 => (r0.getLong(0), r0.getLong(1))).toSeq
+    assert(dist == expected)
   }
 
   private def eventually(timeoutMs: Long = 20000)(cond: => Boolean): Boolean = {
@@ -114,11 +111,11 @@ class Curation8Spec extends SparkSpecBase {
   private def nCachedRdds: Int = spark.sparkContext.getPersistentRDDs.size
 
   test("q146 loop persists survive an unrelated execution and release after the head runs") {
-    sys.props("graft.pr.driverFallbackEdges") = "0" // force the distributed path
     try {
       spark.catalog.clearCache()
       assert(nCachedRdds == 0, "stale caches before test")
-      val head = Curation8.q146.run(spark, sfDir)
+      // force the distributed path
+      val head = Curation8.pageRank(spark, sfDir, driverFallbackEdges = 0L)
       // construction materialized und (edge count) and deg (node count)
       // plus the shared pair persists — all registered
       val n0 = nCachedRdds
@@ -134,28 +131,21 @@ class Curation8Spec extends SparkSpecBase {
       head.collect() // materializes withDeg (+1), then the listener fires (-3)
       assert(eventually()(nCachedRdds == n0 - 2),
         s"executing the head must release the 3 loop persists (have $nCachedRdds, started $n0)")
-    } finally {
-      sys.props.remove("graft.pr.driverFallbackEdges")
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
 
   test("q146 plan-only caller: persists release after the unrelated-execution count AND time grace") {
-    sys.props("graft.pr.driverFallbackEdges") = "0"
-    sys.props("graft.pr.cacheGraceMs") = "0" // collapse the time gate for the spec
     try {
       spark.catalog.clearCache()
-      Curation8.q146.run(spark, sfDir) // head never executed (PlanShapeSpec's pattern)
+      // head never executed (PlanShapeSpec's pattern); a zero grace
+      // collapses the time gate for the spec
+      Curation8.pageRank(spark, sfDir, driverFallbackEdges = 0L, cacheGraceMs = 0L)
       val n0 = nCachedRdds
       assert(n0 >= 4)
       (1 to 4).foreach(_ => spark.range(10).count()) // > UnrelatedGrace
       assert(eventually()(nCachedRdds == n0 - 2),
         s"plan-only q146 leaked its persists past the grace window (have $nCachedRdds, started $n0)")
-    } finally {
-      sys.props.remove("graft.pr.driverFallbackEdges")
-      sys.props.remove("graft.pr.cacheGraceMs")
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
 
   test("q158 incremental clustering census equals a full-graph recompute") {

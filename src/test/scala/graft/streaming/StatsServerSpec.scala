@@ -135,4 +135,37 @@ class StatsServerSpec extends SparkSpecBase {
       spark.streams.removeListener(listener)
     }
   }
+
+  // A poison message's error carries raw bytes, and a query name may
+  // hold a newline: both endpoints must still serve parseable JSON that
+  // round-trips the strings, in each endpoint's key order.
+  test("status and detail JSON round-trip control characters in names and errors") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val listener = new PipelineStatsListener(() => 15)
+    val name = "a\nb"
+    val error = "java.lang.NumberFormatException: For input string: \"\u0001\" \u001b[31m"
+    listener.recordDeadLetter(name,
+      graft.pipeline.DeadLetter("m\u00011", "{}", error, "at x\tline\r\n", "op"))
+    val statusJson = listener.snapshotJson
+    val row = JsonMethods.parse(statusJson).children.head
+    assert(row \ "name" == JString(name))
+    assert(row \ "failed" == JInt(1))
+    assert(statusJson.contains("\"avg_time_taken_ms\":0.0,\"95_percentile_ms\":0.0"))
+    assert(row.asInstanceOf[JObject].obj.map(_._1) == List("name", "processed", "success",
+      "failed", "waiting", "peak_waiting", "behind_latest", "avg_time_taken_ms",
+      "95_percentile_ms", "minutes_processed", "minutes_errors", "status"))
+
+    val detail = JsonMethods.parse(StatsServer.detailJson(listener.snapshot(name)))
+    assert(detail \ "name" == JString(name))
+    assert(detail \ "status" == JString("failing"))
+    val failure = (detail \ "failed_messages").children.head
+    assert(failure \ "error" == JString(error))
+    assert(failure \ "message_id" == JString("m\u00011"))
+    assert(failure \ "traceback" == JString("at x\tline\r\n"))
+    assert(detail.asInstanceOf[JObject].obj.map(_._1) == List("name", "status", "processed",
+      "success", "failed", "waiting", "peak_waiting", "behind_latest", "avg_time_taken_ms",
+      "95_percentile_ms", "last_batch_ms", "minutes_processed", "minutes_errors",
+      "failed_messages"))
+  }
 }
