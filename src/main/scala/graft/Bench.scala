@@ -114,7 +114,7 @@ object Bench {
     // SPARK_GRAFT_QUERIES=q61,q78; unset, the whole registry runs.
     val filter = sys.env.get("SPARK_GRAFT_QUERIES")
     val selected = SparkEntry.select(filter.toSeq.flatMap(_.split(',')))
-      .map(q => q.name -> q.run).sortBy(_._1)
+      .map(q => q.name -> (q.run _)).sortBy(_._1)
     val spark = SessionTuning.session("graft-bench", s"local[$cpus]")
 
     // Warmup: touch every table scan + exercise codegen/shuffle machinery.

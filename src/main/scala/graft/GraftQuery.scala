@@ -10,8 +10,13 @@ import org.apache.spark.sql.types._
   */
 final case class GraftQuery(
     name: String,
-    run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    build: (SparkSession, String) => DataFrame,
+    oracle: Option[String]) {
+
+  /** The query's DataFrame, built in its own [[QueryScope]]: whatever the
+    * build persists is released once the result is materialized. */
+  def run(spark: SparkSession, dir: String): DataFrame = QueryScope(spark)(build(spark, dir))
+}
 
 /** Shared helpers that keep Spark and DuckDB bit-identical.
   *

@@ -12,7 +12,12 @@ import scala.collection.mutable
   * contention). `GRAFT_PROFILE_PLAN=1` additionally dumps the executed
   * plan with per-node metrics; `SPARK_GRAFT_CPUS` sets the core count
   * (default 32). Usage:
-  * `sbt "runMain graft.ProfileMain q29 [sfDir] [reps]"`. */
+  * `sbt "runMain graft.ProfileMain q29 [sfDir] [reps]"`.
+  *
+  * The last line reads `cold_s=<first rep> warm_s=<median of the later
+  * reps>`: the first rep pays the JVM's first execution of the query
+  * (codegen, class loading), the later ones do not, so a warmed A/B of
+  * a plan change is this command once per side, in a fresh JVM each. */
 object ProfileMain {
   def main(args: Array[String]): Unit = {
     val q = SparkEntry.select(Seq(args(0))).head
@@ -112,5 +117,8 @@ object ProfileMain {
     }
     spark.stop()
     RegistryRunner.exitIfFailed(runs)
+    val warm = runs.tail.map(_.sec).sorted
+    val warmS = if (warm.isEmpty) "n/a" else f"${(warm((warm.size - 1) / 2) + warm(warm.size / 2)) / 2}%.3f"
+    println(f"== ${q.name} cold_s=${runs.head.sec}%.3f warm_s=$warmS")
   }
 }

@@ -14,12 +14,16 @@ object RegistryRunner {
   final case class Timed(name: String, sec: Double, gcMs: Long,
       heapMb: Long, err: Option[String])
 
-  /** Drops what a query left behind, so it can't distort a later one:
-    * Dataset persists registered in the CacheManager, then the RDD-level
-    * persists it never sees (`localCheckpoint()` blocks included), then
-    * `System.gc()`, because the weak-ref ContextCleaner frees broadcasts
-    * and shuffle state only when the JVM collects (heavy queries measured
-    * ~3x their isolated cost late in a long run without it). */
+  /** The harness backstop after each query. A registry query's own
+    * [[QueryScope]] has already released what it persisted; the sweep
+    * also drops what no scope owns — a persist made outside any query
+    * (StressMain's, a spec's), Dataset persists in the CacheManager and
+    * then the RDD-level ones it never sees (`localCheckpoint()` blocks
+    * included) — and then runs `System.gc()`, because the weak-ref
+    * ContextCleaner frees broadcasts and shuffle state only when the JVM
+    * collects (heavy queries measured ~3x their isolated cost late in a
+    * long run without it). A library caller's session needs none of
+    * it: the sweep also drops the caller's own caches. */
   def sweep(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -33,17 +37,20 @@ object RegistryRunner {
   }
 
   /** Builds `name` on `sfDir` and applies `action`, timed together, then
-    * `sweep`s untimed. NonFatal only: a fatal error (OOM, linkage) ends
-    * the run instead of reading as one failed query. */
+    * closes the query's [[QueryScope]] and `sweep`s, untimed. NonFatal
+    * only: a fatal error (OOM, linkage) ends the run instead of reading
+    * as one failed query. */
   def run(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => DataFrame, action: DataFrame => Unit): Timed = {
     val gc0 = gcMillis()
     val t0 = System.nanoTime()
+    var built: Option[DataFrame] = None
     val err =
-      try { action(fn(spark, sfDir)); None }
+      try { built = Some(fn(spark, sfDir)); action(built.get); None }
       catch { case NonFatal(e) => Some(s"${e.getClass.getName}: ${e.getMessage}") }
     val dt = (System.nanoTime() - t0) / 1e9
     val gcd = gcMillis() - gc0
+    built.foreach(QueryScope.close)
     sweep(spark)
     val rt = Runtime.getRuntime
     Timed(name, dt, gcd, (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024), err)

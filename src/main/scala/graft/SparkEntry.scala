@@ -37,7 +37,7 @@ object SparkEntry {
 
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.run).toMap
+    registry.map(q => q.name -> (q.run _)).toMap
 
   /** The registry queries `ids` name, in registry order. An id is a full
     * name or the exact id before its first `_`, so `q11` selects

@@ -33,6 +33,9 @@ object ThroughputMain {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SessionTuning.session("graft-throughput", s"local[$cpus]")
     import spark.implicits._
+    // per-phase micro-batch times of both runs, for the artifact
+    val stats = new graft.streaming.PipelineStatsListener()
+    spark.streams.addListener(stats)
 
     val sentences = Array(
       "Oak is strong and also gives shade",
@@ -117,8 +120,15 @@ object ThroughputMain {
         .toSeq
       if (rs.isEmpty) 0 else rs.max + 1
     }
+    // each query's durationMs phases as p50/p95 ms, e.g.
+    // {"thr_wc":{"addBatch":{"p50":..,"p95":..},...}}
+    val phases = stats.snapshot.toSeq.sortBy(_._1).map { case (q, st) =>
+      st.phasePercentilesMs.toSeq.sortBy(_._1).map { case (k, (p50, p95)) =>
+        val (a, b) = ("%.1f".formatLocal(java.util.Locale.ROOT, p50), "%.1f".formatLocal(java.util.Locale.ROOT, p95))
+        s""""$k":{"p50":$a,"p95":$b}""" }.mkString(s""""$q":{""", ",", "}")
+    }.mkString("{", ",", "}")
     val json =
-      f"""{"metric":"streaming_throughput","unit":"msgs_per_sec","messages":$total,"cpus":"$cpus","passthrough":$passPerSec%.0f,"wordcount":$wcPerSec%.0f,"words_per_sec":$wordsPerSec%.0f}"""
+      f"""{"metric":"streaming_throughput","unit":"msgs_per_sec","messages":$total,"cpus":"$cpus","passthrough":$passPerSec%.0f,"wordcount":$wcPerSec%.0f,"words_per_sec":$wordsPerSec%.0f,"phases_ms":$phases}"""
     println(json)
     spark.stop()
     // after the stop, so a failed write's exception ends the JVM

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.QueryScope
 
 /** Connected components by min-label propagation — the canonical way to
   * turn near-duplicate PAIRS (MinHash/SimHash/n-gram candidates) into
@@ -18,7 +18,7 @@ import org.apache.spark.storage.StorageLevel
   * almost always ≤3. The only driver-side value is the scalar
   * changed-row count; labels never leave the cluster.
   *
-  * Scale notes (100 TB): each round's labels are localCheckpoint()ed
+  * Scale notes (100 TB): each round's labels are checkpointed locally
   * (eager) so lineage stays one iteration deep, and the previous
   * generation's checkpoint blocks are explicitly released once the new
   * round is materialized (via the LogicalRDD — Dataset.unpersist cannot
@@ -66,11 +66,10 @@ object ConnectedComponents {
     // join (q84/q89's prefix-filtered all-pairs), the first
     // materialization would run that join twice. One scan, each edge
     // emitting both directions.
-    val und = edges.select(explode(array(
+    val und = QueryScope.persist(edges.select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
 
     // The count materializes the persisted edge list (the seed
     // aggregation needs it materialized anyway) and picks the path.
@@ -140,7 +139,7 @@ object ConnectedComponents {
         .toDF("node", "comp")
     }
 
-    // localCheckpoint (eager) after every round: it materializes the
+    // Local checkpoint (eager) after every round: it materializes the
     // labels AND truncates lineage, so the logical plan stays one
     // iteration deep — without it the plan tree doubles per round
     // (labels appears twice in each update) and planning itself blows
@@ -151,10 +150,9 @@ object ConnectedComponents {
     // neighbor). One aggregation replaces the distinct-nodes pass AND
     // the first propagation round — same result, one fewer join +
     // checkpoint generation in the loop.
-    var labels = und.groupBy(col("src"))
+    var labels = QueryScope.checkpoint(und.groupBy(col("src"))
       .agg(least(min(col("dst")), col("src")).as("comp"))
-      .select(col("src").as("node"), col("comp"))
-      .localCheckpoint()
+      .select(col("src").as("node"), col("comp")))
 
     var iter = 0
     var converged = false
@@ -164,11 +162,10 @@ object ConnectedComponents {
         .groupBy(col("src").as("node"))
         .agg(min(col("comp")).as("nbr_comp"))
       val prevLabels = labels
-      val prop = labels.join(nbrMin, Seq("node"), "left")
+      val prop = QueryScope.checkpoint(labels.join(nbrMin, Seq("node"), "left")
         .select(col("node"), col("comp").as("old_comp"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-        .localCheckpoint()
-      // prop is materialized (localCheckpoint is eager), so the previous
+          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp")))
+      // prop is materialized (the checkpoint is eager), so the previous
       // generation's blocks can be released — without this the job
       // accumulates one persisted generation per round
       org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(prevLabels)
@@ -182,15 +179,14 @@ object ConnectedComponents {
       // convergence metric rides the checkpoint's materialization job
       // via observe() — one job, no separate count
       val obs = org.apache.spark.sql.Observation(s"cc_round_$iter")
-      val next = prop.join(ptr, prop("comp") === ptr("p_node"), "left")
+      val next = QueryScope.checkpoint(prop.join(ptr, prop("comp") === ptr("p_node"), "left")
         .select(prop("node"), prop("old_comp"),
           least(prop("comp"), coalesce(col("p_comp"), prop("comp"))).as("comp"))
-        .observe(obs, sum(when(col("comp") < col("old_comp"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint()
+        .observe(obs, sum(when(col("comp") < col("old_comp"), 1L).otherwise(0L)).as("changed")))
       val changed = obs.get("changed").asInstanceOf[Long]
       // next is materialized; the intermediate prop generation (its
       // only consumer) can be released. The final labels stay persisted
-      // for the caller.
+      // until the caller's query scope closes.
       org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(prop)
       labels = next.select("node", "comp")
       converged = changed == 0

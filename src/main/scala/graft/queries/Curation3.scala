@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, QueryScope, Tables}
 import graft.QueryDsl.{crossHash60, crossHash60Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -180,10 +180,9 @@ object Curation3 {
     // the vocabulary branch and the per-doc OOV branch both re-aggregate
     // that relation (duplicate words collapse, so it is ≤ the token
     // stream and usually far smaller) instead of re-scanning documents.
-    val dwc = Tables(s, dir).documents
+    val dwc = QueryScope.persist(Tables(s, dir).documents
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("doc_id", "w").agg(count(lit(1)).as("c")))
     val vocab = dwc.groupBy("w").agg(sum(col("c")).as("c"))
       .orderBy(col("c").desc, col("w")).limit(64)
       .select(col("w"), lit(1).as("in_v"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, QueryScope, Tables}
 import graft.QueryDsl.{crossHash60, crossHash60Sql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,13 +53,12 @@ object Curation4 {
     def spans(tokens: Column): Column =
       array_distinct(graft.functions.expr.TextExpressions.spanJoin(tokens, 8))
     val obs = org.apache.spark.sql.Observation()
-    val docs = Tables(s, dir).documents
+    val docs = QueryScope.persist(Tables(s, dir).documents
       .withColumn("_t", split(col("text"), " "))
       .where(size(t) >= 8)
       .withColumn("_slice", pmod(crossHash60(col("doc_id")), lit(5)))
       .select(col("doc_id"), col("_slice"), spans(t).as("_sp"))
-      .observe(obs, sum(when(col("_slice") =!= 0, 1L).otherwise(0L)).as("base_docs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .observe(obs, sum(when(col("_slice") =!= 0, 1L).otherwise(0L)).as("base_docs")))
     docs.count() // materialize + observe in one job
     (docs, obs.get("base_docs").asInstanceOf[Long])
   }
@@ -289,13 +288,12 @@ object Curation4 {
     import s.implicits._
     val chars = transform(sequence(lit(1), length(col("word"))),
       i => col("word").substr(i, lit(1)))
-    val base = Tables(s, dir).documents
+    val base = QueryScope.persist(Tables(s, dir).documents
       .select(explode(split(col("text"), " ")).as("word"))
       .where(length(col("word")) >= 1)
       .groupBy("word").agg(count(lit(1)).as("n"))
       .select(col("word"),
-        concat(lit(" "), array_join(chars, "  "), lit(" ")).as("w"), col("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        concat(lit(" "), array_join(chars, "  "), lit(" ")).as("w"), col("n")))
     // one bounded probe job: ≤ cutover+1 rows decide the path (and
     // materialize the cache the distributed path would reuse)
     val head = base.limit(driverFallbackWords + 1).as[(String, String, Long)].collect()

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, QueryScope, Tables}
 import graft.QueryDsl.{crossHash60, crossHash60Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -156,8 +156,7 @@ object Curation7 {
     * cutover; 0 forces the distributed plan. */
   private[graft] def triangleCensus(edges: DataFrame,
       driverFallbackEdges: Long = 1000000L): DataFrame = {
-    val und = edges
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = QueryScope.persist(edges)
     // Eager materialization (the q84/q146 discipline): the census job
     // reads `und` from THREE independent branches (degree census, edge
     // count, wedge build). Branches of one job can start before a lazy
@@ -247,11 +246,10 @@ object Curation7 {
       .join(deg.select(col("node").as("a_id"), col("deg").as("da")), Seq("a_id"))
       .join(deg.select(col("node").as("b_id"), col("deg").as("db")), Seq("b_id"))
     val aFirst = col("da") < col("db") || (col("da") === col("db") && col("a_id") < col("b_id"))
-    val oriented = withDeg.select(
+    val oriented = QueryScope.persist(withDeg.select(
         when(aFirst, col("a_id")).otherwise(col("b_id")).as("u"),
         when(aFirst, col("b_id")).otherwise(col("a_id")).as("v"),
-        when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        when(aFirst, col("db")).otherwise(col("da")).as("dv")))
     // same race on `oriented` (read by both wedge sides + the closing
     // semi-join probe); edge-sized, so pinning it is cheap
     oriented.count()

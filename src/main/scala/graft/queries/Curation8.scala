@@ -1,10 +1,9 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, QueryScope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
-import org.apache.spark.storage.StorageLevel
 
 /** Eighth curation batch: corpus-statistics and model-evaluation
   * operators — bounded-memory frequent-pattern mining, link-analysis
@@ -156,19 +155,17 @@ object Curation8 {
 
   /** q146's body. `driverFallbackEdges` is the size-adaptive cutover: at
     * most this many directed edges run the 8 rounds on the driver, and 0
-    * forces the distributed loop. `cacheGraceMs` is the wall-clock grace
-    * before the loop caches' release fallback may fire. */
+    * forces the distributed loop. */
   private[graft] def pageRank(s: SparkSession, dir: String,
-      driverFallbackEdges: Long = 1000000L, cacheGraceMs: Long = 60000L): DataFrame = {
+      driverFallbackEdges: Long = 1000000L): DataFrame = {
     import s.implicits._
     // Undirect via explode, not union(reversed): a union plans the
     // prefix-filtered pair join twice (the q84 CC lesson) — one scan,
     // each edge emitting both directions, persisted once.
-    val und = dupEdges(s, dir).select(explode(array(
+    val und = QueryScope.persist(dupEdges(s, dir).select(explode(array(
         struct(col("a_id").as("u"), col("b_id").as("v")),
         struct(col("b_id").as("u"), col("a_id").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("e.u").as("u"), col("e.v").as("v")))
     val m = und.count() // materializes the persist AND picks the path
     if (m == 0) {
       und.select(col("u").as("node"), lit(0L).as("score")).where(lit(false))
@@ -211,9 +208,8 @@ object Curation8 {
         .map(k => (ids(k), r(k)))
       s.createDataFrame(top).toDF("node", "score")
     } else {
-      val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val withDeg = und.join(deg, Seq("u")).persist(StorageLevel.MEMORY_AND_DISK)
+      val deg = QueryScope.persist(und.groupBy("u").agg(count(lit(1)).as("deg")))
+      val withDeg = QueryScope.persist(und.join(deg, Seq("u")))
       val n = deg.count() // |nodes| — the distributed path's one scalar
       val base = 15L * PrScale / (100L * n)
       // No per-round checkpoint: unlike the CC loop (whose path-halving
@@ -234,58 +230,12 @@ object Curation8 {
       // The returned plan MUST stay TakeOrderedAndProject-headed (the
       // scale contract PlanShapeSpec gates): a global sort of a
       // corpus-sized node set for a 20-row answer is the q118/q142
-      // smell. But a multi-query suite also must not accumulate this
-      // query's persists. Pre-materializing here and unpersisting would
-      // make the HARNESS's action replan uncached and recompute the
-      // whole loop (a fresh QueryExecution shares no shuffle files), so
-      // instead the caches are released by a one-shot
-      // QueryExecutionListener that fires when an execution whose plan
-      // CONTAINS this head (sameResult subtree — covers collect, count,
-      // and write commands wrapping it) completes — an unrelated query
-      // executing first no longer drops the caches out from under the
-      // loop. Plan-only callers (PlanShapeSpec) never execute the head,
-      // so a fallback releases after a bounded number of unrelated
-      // executions instead of leaking the persists + listener forever —
-      // gated on a wall-clock grace too, so a caller that constructs
-      // the query, runs a few interactive queries, and only then
-      // materializes the head (a notebook session) does not get its
-      // loop caches dropped by the counting alone.
-      // Residual (documented, perf-only): executing the head TWICE
-      // recomputes uncached the second time — one-shot release cannot
-      // know how many materializations are coming.
-      val head = r.select(col("node"), col("r").as("score"))
+      // smell. Pre-materializing here and unpersisting would make the
+      // caller's action replan uncached and recompute the whole loop (a
+      // fresh QueryExecution shares no shuffle files), so the loop
+      // caches stay until the query's scope sees the head execute.
+      r.select(col("node"), col("r").as("score"))
         .orderBy(col("score").desc, col("node")).limit(20)
-      val caches = Seq(deg, withDeg, und)
-      val target = head.queryExecution.analyzed
-      val release = new org.apache.spark.sql.util.QueryExecutionListener {
-        private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-        private val unrelated = new java.util.concurrent.atomic.AtomicInteger(0)
-        private val UnrelatedGrace = 3
-        // fallback arms only after BOTH a count of unrelated executions
-        // AND the wall-clock grace — counting alone would release a
-        // deferred-materialization caller's caches after 3 quick
-        // queries
-        private val armedAtMs = System.currentTimeMillis()
-        private def fire(): Unit = if (done.compareAndSet(false, true)) {
-          caches.foreach(_.unpersist())
-          s.listenerManager.unregister(this)
-        }
-        private def handle(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
-          val isHead =
-            try qe.analyzed.exists(p => (p eq target) || p.sameResult(target))
-            catch { case scala.util.control.NonFatal(_) => false }
-          if (isHead || (unrelated.incrementAndGet() >= UnrelatedGrace &&
-              System.currentTimeMillis() - armedAtMs >= cacheGraceMs)) fire()
-        }
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = handle(qe)
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = handle(qe)
-      }
-      s.listenerManager.register(release)
-      head
     }
   }
 
@@ -419,9 +369,8 @@ object Curation8 {
     val docs = Tables(s, dir).documents
     val votes = Curation6.voteTable(
       docs.where(pmod(col("doc_id"), lit(2)) === 0), posS, negS)
-    val holdout = docs
-      .where(pmod(col("doc_id"), lit(2)) === 1 && col("source").isin((posS ++ negS): _*))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val holdout = QueryScope.persist(docs
+      .where(pmod(col("doc_id"), lit(2)) === 1 && col("source").isin((posS ++ negS): _*)))
     val margins = holdout
       .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("word"))
       .join(broadcast(votes), Seq("word"))
@@ -497,14 +446,13 @@ object Curation8 {
       |  COALESCE(n_base_clusters, 0) AS n_base_clusters
       |FROM cen LEFT JOIN b2 USING (cluster_id) ORDER BY cen.cluster_id""".stripMargin) { (s, dir) =>
     val isNew = (c: org.apache.spark.sql.Column) => pmod(c, lit(5L)) === 0
-    val pairs = dupEdges(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
+    val pairs = QueryScope.persist(dupEdges(s, dir))
     val basePairs = pairs.where(!isNew(col("a_id")) && !isNew(col("b_id")))
     val deltaPairs = pairs.where(isNew(col("a_id")) || isNew(col("b_id")))
     // the stored state: base clustering (size-adaptive CC, q84's path)
-    val baseLabels = graft.operators.ConnectedComponents
+    val baseLabels = QueryScope.persist(graft.operators.ConnectedComponents
       .minLabelPropagation(basePairs)
-      .select(col("node"), col("comp").as("l1"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("node"), col("comp").as("l1")))
     // contract → solve → compose, via the first-class operator (r18:
     // the deployment split a real ingest loop runs — stored labels in,
     // delta edges in, no base-edge read). base_comp is the stored label
@@ -575,8 +523,7 @@ object Curation8 {
       |SELECT * FROM row50 UNION ALL SELECT * FROM row90
       |UNION ALL SELECT * FROM row95 UNION ALL SELECT * FROM row98
       |ORDER BY threshold""".stripMargin) { (s, dir) =>
-    val scored = Dedup.allPairsJaccard(s, dir, 0.5)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val scored = QueryScope.persist(Dedup.allPairsJaccard(s, dir, 0.5))
     val thresholds = Seq(0.5, 0.9, 0.95, 0.98)
     // ONE pass over the (result-sized, persisted) scored pairs computes
     // all four legs' survivor counts — r18: this was four sequential

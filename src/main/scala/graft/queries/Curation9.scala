@@ -1,10 +1,9 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, QueryScope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
-import org.apache.spark.storage.StorageLevel
 
 /** Ninth curation batch: the human-in-the-loop QA surfaces — a
   * deterministic per-source inspection sample (the "show me a few docs
@@ -122,11 +121,10 @@ object Curation9 {
     val flat = cents.flatMap(_._2)
     val dim = cents.head._2.length
     val st = broadcast(Curation5.sqStats(s, dir))
-    val assigned = c.crossJoin(st)
+    val assigned = QueryScope.persist(c.crossJoin(st)
       .select(col("vec_id"),
         nearestCentroidId(col("v"), flat, ids, dim).as("cent_id"),
-        Curation5.sqCode(col("v")).as("q"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        Curation5.sqCode(col("v")).as("q")))
     // codegen-native integer dot — exact twin of the HOF fold it replaces
     val dot = graft.functions.expr.SimilarityExpressions.dotLong(col("q"), col("cq"))
     val nbrs = assigned
@@ -257,11 +255,10 @@ object Curation9 {
     val flat = cents.flatMap(_._2)
     val dim = cents.head._2.length
     val st = broadcast(Curation5.sqStats(s, dir))
-    val assigned = c.crossJoin(st)
+    val assigned = QueryScope.persist(c.crossJoin(st)
       .select(col("vec_id"),
         nearestCentroidId(col("v"), flat, ids, dim).as("cent_id"),
-        Curation5.sqCode(col("v")).as("q"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        Curation5.sqCode(col("v")).as("q")))
     // the 16 centroid rows carry their own codes; every centroid
     // assigns to itself (cos=1 is the max), so the filter is exact
     val centCodes = assigned.where(col("vec_id").isInCollection(ids))

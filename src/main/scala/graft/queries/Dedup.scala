@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, QueryScope, Tables}
 import graft.functions.DedupFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -267,9 +267,11 @@ object Dedup {
     * pushdown, so all references share one materialization; the eager
     * count serializes the build (otherwise concurrently-materializing
     * AQE stages race on cache blocks — KeyLock contention was the top
-    * non-compute frame — and each recomputes the kernels). */
+    * non-compute frame — and each recomputes the kernels). The persist
+    * is the query's: its [[QueryScope]] releases it with the rest once
+    * the result is materialized. */
   private[queries] def eager(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = QueryScope.persist(df)
     p.count()
     p
   }
@@ -467,10 +469,10 @@ object Dedup {
     // prefix build, both verify sides): persist it so one action
     // computes it once. Spark's cache manager keys on the canonicalized
     // plan, so an identical subtree elsewhere in the same query shares
-    // ONE entry (the sweep after each query drops it).
+    // ONE entry (the query's scope releases it).
     // At cluster scale this is the standard "materialize the prepared
     // corpus once" step (MEMORY_AND_DISK spills, never OOMs).
-    val d = d0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val d = QueryScope.persist(d0)
     val dfreq = d.select(explode(col("shh")).as("sh"))
       .groupBy("sh").agg(count(lit(1)).as("df"))
     // persisted: both sides of the candidate self-join reference the
@@ -484,15 +486,14 @@ object Dedup {
     // into the rank filter; the kernel sorts each doc's ~|doc| entries
     // and emits only the prefix (guide §2.3/§2.4 — same single
     // exchange by doc_id, no partition-wide sort, 40% fewer rows out).
-    val prefix = d.select(col("doc_id"), explode(col("shh")).as("sh"))
+    val prefix = QueryScope.persist(d.select(col("doc_id"), explode(col("shh")).as("sh"))
       .join(dfreq, Seq("sh"))
       .groupBy("doc_id")
       .agg(collect_list(struct(col("df"), col("sh"))).as("_e"))
       .select(col("doc_id"), size(col("_e")).as("sz"),
         posexplode(graft.functions.expr.DedupExpressions.prefixByDf(col("_e"), threshold))
           .as(Seq("_pos", "sh")))
-      .select(col("sh"), col("doc_id"), col("sz"), (col("_pos") + lit(1)).as("rk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("sh"), col("doc_id"), col("sz"), (col("_pos") + lit(1)).as("rk")))
     // Candidate pruning on the collision rows, before the distinct:
     //  - length filter: J ≥ t ⇒ min|x| ≥ t·max|x|;
     //  - positional filter (PPJoin, Xiao et al. WWW'08): a collision on
@@ -529,20 +530,19 @@ object Dedup {
     * relation is benchmark-sized and broadcasts; the side-1 scan
     * stays partition-local. */
   private[graft] def crossCorpusJaccardOn(d0: DataFrame, threshold: Double): DataFrame = {
-    val d = d0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val d = QueryScope.persist(d0)
     val dfreq = d.select(explode(col("shh")).as("sh"))
       .groupBy("sh").agg(count(lit(1)).as("df"))
     // per-doc df rank as hash aggregate + in-row prefix kernel — see
     // the [[allPairsJaccardOn]] note (same r19 window removal).
-    val prefix = d.select(col("doc_id"), col("side"), explode(col("shh")).as("sh"))
+    val prefix = QueryScope.persist(d.select(col("doc_id"), col("side"), explode(col("shh")).as("sh"))
       .join(dfreq, Seq("sh"))
       .groupBy("doc_id", "side")
       .agg(collect_list(struct(col("df"), col("sh"))).as("_e"))
       .select(col("doc_id"), col("side"), size(col("_e")).as("sz"),
         posexplode(graft.functions.expr.DedupExpressions.prefixByDf(col("_e"), threshold))
           .as(Seq("_pos", "sh")))
-      .select(col("sh"), col("doc_id"), col("side"), col("sz"), (col("_pos") + lit(1)).as("rk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("sh"), col("doc_id"), col("side"), col("sz"), (col("_pos") + lit(1)).as("rk")))
     val alpha = ceil(lit(threshold / (1 + threshold)) * (col("a_sz") + col("b_sz")))
     val cand = prefix.where(col("side") === 1)
       .select(col("sh"), col("doc_id").as("b_id"), col("sz").as("b_sz"), col("rk").as("b_rk"))

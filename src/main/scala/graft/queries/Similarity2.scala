@@ -1,10 +1,9 @@
 package graft.queries
 
-import graft.GraftQuery
+import graft.{GraftQuery, QueryScope}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
-import org.apache.spark.storage.StorageLevel
 
 /** Retrieval-quality evaluation: the index-tuning measurements that turn
   * "we deployed IVF" into "we deployed IVF at the measured recall/cost
@@ -89,27 +88,24 @@ object Similarity2 {
     val ids = cents.map(_._1)
     val flat = cents.flatMap(_._2)
     val dim = cents.head._2.length
-    val st = broadcast(Curation5.sqStats(s, dir)
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val assigned = c.crossJoin(st)
+    val st = broadcast(QueryScope.persist(Curation5.sqStats(s, dir)))
+    val assigned = QueryScope.persist(c.crossJoin(st)
       .select(col("vec_id"),
         nearestCentroidId(col("v"), flat, ids, dim).as("cent_id"),
-        Curation5.sqCode(col("v")).as("q"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        Curation5.sqCode(col("v")).as("q")))
     val queries = c.where(col("vec_id") < NQ).crossJoin(st)
       .select(col("vec_id").as("qid"), Curation5.sqCode(col("v")).as("qc"),
         probeCentroidIds(col("v"), flat, ids, dim, MaxProbe).as("plist"))
     // codegen-native integer dot — exact twin of the HOF fold it replaces
     val dot = graft.functions.expr.SimilarityExpressions.dotLong(col("qc"), col("q"))
     // truth: the exhaustive SQ8 baseline (q121's shape, bounded-heap head)
-    val truth = assigned.crossJoin(broadcast(queries.select(col("qid"), col("qc"))))
+    val truth = QueryScope.persist(assigned.crossJoin(broadcast(queries.select(col("qid"), col("qc"))))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cid"), dot.as("dot"))
       .groupBy("qid")
       .agg(graft.functions.TopK.topKLong(K)(col("cid"), col("dot")).as("top"))
       .select(col("qid"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("qid"), col("e._1").as("cid"), (col("pos") + 1).as("t_rk"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("qid"), col("e._1").as("cid"), (col("pos") + 1).as("t_rk")))
     // swept runs: each probed candidate scored ONCE; the grid replicates
     // only (qid, cid, dot) into the per-(np, qid) heaps
     val qProbes = queries

@@ -33,7 +33,15 @@ final class UpsertParquetSink(tablePath: String, keyCols: Seq[String]) extends S
     * at-least-once redelivery to an exactly-once effect. */
   def write(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = new Path(tablePath)
+    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // A crash between the two renames below leaves no live table, the
+    // previous one under __old_<id>, and the marker naming the batch
+    // before: put the table back before the replay merges into it.
+    if (!fs.exists(cur))
+      Option(fs.globStatus(new Path(tablePath + "__old_*"))).toSeq.flatten
+        .map(_.getPath).sortBy(_.getName.split("__old_").last.toLong)
+        .lastOption.foreach(fs.rename(_, cur))
     val marker = new Path(tablePath + "__last_batch")
     if (fs.exists(marker)) {
       val in = fs.open(marker)
@@ -41,7 +49,6 @@ final class UpsertParquetSink(tablePath: String, keyCols: Seq[String]) extends S
       if (batchId <= last) return // replayed batch — already applied
     }
     val deduped = lastPerKey(batch)
-    val cur = new Path(tablePath)
     val merged =
       if (fs.exists(cur)) {
         val existing = spark.read.parquet(tablePath)

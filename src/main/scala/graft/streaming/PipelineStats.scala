@@ -76,16 +76,21 @@ object PipelineStats {
       peakWaiting: Long = 0,
       sourceLag: Map[String, Long] = Map.empty,
       batchDurationsMs: Vector[Long] = Vector.empty,
+      phaseDurationsMs: Map[String, Vector[Long]] = Map.empty,
       histogram: Map[Int, MinuteBucket] = Map.empty,
       failures: Vector[FailureRecord] = Vector.empty,
       lastSeenMs: Long = 0L) {
     def avgTimeTakenMs: Double =
       if (batchDurationsMs.isEmpty) 0.0
       else batchDurationsMs.sum.toDouble / batchDurationsMs.size
-    def p95TimeTakenMs: Double =
-      if (batchDurationsMs.isEmpty) 0.0
-      else percentileFromCounts(
-        batchDurationsMs.groupBy(_.toDouble).view.mapValues(_.size.toLong).toMap, 0.95)
+    def p95TimeTakenMs: Double = percentileMs(batchDurationsMs, 0.95)
+
+    /** p50 and p95 of each `durationMs` phase of the progress events
+      * (`triggerExecution`, `addBatch`, `queryPlanning`, `walCommit`,
+      * `commitOffsets`, `latestOffset`, `getBatch`, ...) over the kept
+      * batches: where a micro-batch's fixed driver cost goes. */
+    def phasePercentilesMs: Map[String, (Double, Double)] =
+      phaseDurationsMs.map { case (k, v) => k -> (percentileMs(v, 0.5), percentileMs(v, 0.95)) }
 
     /** The last 60 minute-buckets oldest→newest, ending at the CURRENT
       * minute — the reference's 60-minute histogram series
@@ -131,6 +136,10 @@ object PipelineStats {
       else "available"
   }
 
+  private def percentileMs(durations: Vector[Long], p: Double): Double =
+    if (durations.isEmpty) 0.0
+    else percentileFromCounts(durations.groupBy(_.toDouble).view.mapValues(_.size.toLong).toMap, p)
+
   /** One query's `/api/status/` row, in key order. Latencies carry one
     * decimal whatever the JVM locale. [[StatsServer.detailJson]] builds
     * the detail object from this row. */
@@ -144,6 +153,8 @@ object PipelineStats {
       "peak_waiting" -> JInt(s.peakWaiting),
       "behind_latest" -> JObject(s.sourceLag.toList.sortBy(_._1).map { case (k, l) => k -> JInt(l) }),
       "avg_time_taken_ms" -> f1(s.avgTimeTakenMs), "95_percentile_ms" -> f1(s.p95TimeTakenMs),
+      "phases_ms" -> JObject(s.phasePercentilesMs.toList.sortBy(_._1).map { case (k, (p50, p95)) =>
+        k -> JObject("p50" -> f1(p50), "p95" -> f1(p95)) }),
       "minutes_processed" -> JArray(minutes.map(b => JInt(b.processedCount)).toList),
       "minutes_errors" -> JArray(minutes.map(b => JInt(b.errorCount)).toList),
       "status" -> JString(s.state(nowMinute)))
@@ -193,6 +204,7 @@ final class PipelineStatsListener(
     val name = key(p.id, p.name)
     val rows = p.numInputRows
     val durMs = Option(p.durationMs.get("triggerExecution")).map(_.toLong).getOrElse(0L)
+    val phases = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }
     // Per-source behind-the-head lag: for numeric-offset sources
     // (QueueRamp positions, Kinesis sequence deltas, file indexes) the
     // progress event's latestOffset − endOffset IS the backlog this
@@ -217,6 +229,8 @@ final class PipelineStatsListener(
         peakWaiting = math.max(s.peakWaiting, waiting),
         sourceLag = if (lags.nonEmpty) lags else s.sourceLag,
         batchDurationsMs = (s.batchDurationsMs :+ durMs).takeRight(3600),
+        phaseDurationsMs = phases.foldLeft(s.phaseDurationsMs) { case (m, (k, v)) =>
+          m.updated(k, (m.getOrElse(k, Vector.empty) :+ v).takeRight(3600)) },
         // zero the UPCOMING minute's bucket (reference controller.py:187)
         // so a stream running past the 60-minute wrap never sums counts
         // from the previous hour into the 3-minute lookback

@@ -19,6 +19,14 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The plan object of the cache-manager entry serving `df`, if any.
+    * Its identity tells one persist of a plan from a later persist of
+    * the same plan (after a `clearCache`), which `storageLevel` cannot. */
+  def cachedPlan(df: org.apache.spark.sql.DataFrame)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).map(_.plan)
+
   /** Free the storage of a `localCheckpoint()`ed DataFrame. The blocks
     * live on the backing checkpointed RDD (not in the cache manager),
     * so `Dataset.unpersist()` cannot reach them; iterative drivers that

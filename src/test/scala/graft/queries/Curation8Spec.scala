@@ -102,12 +102,11 @@ class Curation8Spec extends SparkSpecBase {
     ok
   }
 
-  // q146's OWN loop persists (und/deg/withDeg) must release exactly when
-  // the returned head executes — not when an unrelated query does. The
-  // shared allPairsJaccard persists (d/prefix) stay cached by design
-  // (cross-query reuse; the harness sweep owns them), so the probe is
-  // the materialized-persist count relative to the post-construction
-  // snapshot, never an absolute isEmpty.
+  // Every persist q146's build makes — the loop's und/deg/withDeg and
+  // the pair build's d/prefix — belongs to the query's scope, and must
+  // release exactly when the returned head executes, not when an
+  // unrelated query does. The session starts with no cached RDD, so
+  // "none of the query's persists remain" is an empty RDD registry.
   private def nCachedRdds: Int = spark.sparkContext.getPersistentRDDs.size
 
   test("q146 loop persists survive an unrelated execution and release after the head runs") {
@@ -115,11 +114,11 @@ class Curation8Spec extends SparkSpecBase {
       spark.catalog.clearCache()
       assert(nCachedRdds == 0, "stale caches before test")
       // force the distributed path
-      val head = Curation8.pageRank(spark, sfDir, driverFallbackEdges = 0L)
+      val head = graft.QueryScope(spark)(Curation8.pageRank(spark, sfDir, driverFallbackEdges = 0L))
       // construction materialized und (edge count) and deg (node count)
-      // plus the shared pair persists — all registered
+      // plus the pair build's persists
       val n0 = nCachedRdds
-      assert(n0 >= 4, s"expected shared + loop persists materialized, saw $n0")
+      assert(n0 >= 4, s"expected pair-build + loop persists materialized, saw $n0")
       // FOUR unrelated executions (past the fallback COUNT) must not
       // drop the caches out from under the not-yet-materialized loop:
       // the wall-clock grace (60 s default) holds them — exactly the
@@ -128,9 +127,10 @@ class Curation8Spec extends SparkSpecBase {
       Thread.sleep(1000) // listener bus is async — give a wrong fire time to land
       assert(nCachedRdds == n0,
         "unrelated executions released the q146 caches inside the time grace")
-      head.collect() // materializes withDeg (+1), then the listener fires (-3)
-      assert(eventually()(nCachedRdds == n0 - 2),
-        s"executing the head must release the 3 loop persists (have $nCachedRdds, started $n0)")
+      head.collect() // materializes withDeg, then the scope releases everything
+      assert(eventually()(nCachedRdds == 0),
+        s"executing the head must release every persist of the query (have $nCachedRdds, started $n0)")
+      assert(!graft.QueryScope.isOpen(head), "the released scope is still listening")
     } finally spark.catalog.clearCache()
   }
 
@@ -139,11 +139,11 @@ class Curation8Spec extends SparkSpecBase {
       spark.catalog.clearCache()
       // head never executed (PlanShapeSpec's pattern); a zero grace
       // collapses the time gate for the spec
-      Curation8.pageRank(spark, sfDir, driverFallbackEdges = 0L, cacheGraceMs = 0L)
+      graft.QueryScope(spark, graceMs = 0L)(Curation8.pageRank(spark, sfDir, driverFallbackEdges = 0L))
       val n0 = nCachedRdds
       assert(n0 >= 4)
       (1 to 4).foreach(_ => spark.range(10).count()) // > UnrelatedGrace
-      assert(eventually()(nCachedRdds == n0 - 2),
+      assert(eventually()(nCachedRdds == 0),
         s"plan-only q146 leaked its persists past the grace window (have $nCachedRdds, started $n0)")
     } finally spark.catalog.clearCache()
   }

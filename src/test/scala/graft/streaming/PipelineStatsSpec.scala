@@ -48,6 +48,11 @@ class PipelineStatsSpec extends SparkSpecBase {
       assert(minutes.exists(_.last == 3L), "current minute's count must be the last entry")
       assert(minutes.exists(_.init.forall(_ == 0L)))
       assert(json.contains("\"minutes_errors\":["))
+      // every durationMs phase of the batch, as p50 and p95
+      val phases = s.phasePercentilesMs
+      assert(Seq("triggerExecution", "addBatch").forall(phases.contains), s"phases: ${phases.keys}")
+      assert(phases.values.forall { case (p50, p95) => 0.0 <= p50 && p50 <= p95 })
+      assert("\"phases_ms\":\\{\"addBatch\":\\{\"p50\":[0-9.]+,\"p95\":[0-9.]+\\}".r.findFirstIn(json).isDefined, json)
       // render path: the minute series draws as a sparkline polyline
       val svg = StatsServer.sparklineSvg(minutes.get)
       assert(svg.contains("<polyline") && svg.contains("peak 3"))

@@ -154,7 +154,7 @@ class StatsServerSpec extends SparkSpecBase {
     assert(statusJson.contains("\"avg_time_taken_ms\":0.0,\"95_percentile_ms\":0.0"))
     assert(row.asInstanceOf[JObject].obj.map(_._1) == List("name", "processed", "success",
       "failed", "waiting", "peak_waiting", "behind_latest", "avg_time_taken_ms",
-      "95_percentile_ms", "minutes_processed", "minutes_errors", "status"))
+      "95_percentile_ms", "phases_ms", "minutes_processed", "minutes_errors", "status"))
 
     val detail = JsonMethods.parse(StatsServer.detailJson(listener.snapshot(name)))
     assert(detail \ "name" == JString(name))
@@ -165,7 +165,7 @@ class StatsServerSpec extends SparkSpecBase {
     assert(failure \ "traceback" == JString("at x\tline\r\n"))
     assert(detail.asInstanceOf[JObject].obj.map(_._1) == List("name", "status", "processed",
       "success", "failed", "waiting", "peak_waiting", "behind_latest", "avg_time_taken_ms",
-      "95_percentile_ms", "last_batch_ms", "minutes_processed", "minutes_errors",
+      "95_percentile_ms", "phases_ms", "last_batch_ms", "minutes_processed", "minutes_errors",
       "failed_messages"))
   }
 }
