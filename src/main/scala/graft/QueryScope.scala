@@ -34,18 +34,23 @@ import scala.util.control.NonFatal
   * builds a query, runs a few others, and only then materializes it
   * from losing the caches. Executing the result a second time
   * recomputes it uncached: a one-shot release cannot know how many
-  * materializations are coming.
+  * materializations are coming. A local checkpoint cannot be
+  * recomputed once its blocks go, so the one an operator returns is
+  * handed back to the caller ([[QueryScope.disown]]); the scope owns
+  * only the generations the operator supersedes.
   *
   * Outside a scope (a spec or StressMain calling an operator directly)
   * a persist belongs to the caller. */
 final class QueryScope private (spark: SparkSession, graceMs: Long) extends QueryExecutionListener {
-  private var releases = List.empty[() => Unit] // newest first
+  private var releases = List.empty[(AnyRef, () => Unit)] // newest first
   private val closed = new AtomicBoolean(false)
   private val unrelated = new AtomicInteger(0)
   @volatile private var head: DataFrame = _
   @volatile private var armedAtMs = 0L
 
-  private def own(release: () => Unit): Unit = synchronized { releases = release :: releases }
+  private def own(key: AnyRef, release: () => Unit): Unit = synchronized { releases = (key, release) :: releases }
+
+  private def disown(key: AnyRef): Unit = synchronized { releases = releases.filterNot(_._1 eq key) }
 
   private def watch(df: DataFrame): Unit = if (synchronized(releases.nonEmpty)) {
     head = df
@@ -59,7 +64,7 @@ final class QueryScope private (spark: SparkSession, graceMs: Long) extends Quer
   def close(): Unit = if (closed.compareAndSet(false, true)) {
     spark.listenerManager.unregister(this)
     Option(head).foreach(QueryScope.open.remove)
-    synchronized(releases).foreach(_())
+    synchronized(releases).foreach(_._2())
   }
 
   private def handle(qe: QueryExecution): Unit = {
@@ -109,15 +114,23 @@ object QueryScope {
     val before = ColumnBridge.cachedPlan(df)
     df.persist(StorageLevel.MEMORY_AND_DISK)
     for (scope <- Option(current.get) if before.isEmpty; mine <- ColumnBridge.cachedPlan(df))
-      scope.own(() => if (ColumnBridge.cachedPlan(df).exists(_ eq mine)) df.unpersist())
+      scope.own(df, () => if (ColumnBridge.cachedPlan(df).exists(_ eq mine)) df.unpersist())
     df
   }
 
   /** `df` checkpointed locally (eager; lineage truncated), its blocks
-    * owned by the open scope. */
+    * owned by the open scope until [[disown]]ed. */
   def checkpoint(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
-    Option(current.get).foreach(_.own(() => ColumnBridge.unpersistCheckpoint(cp)))
+    Option(current.get).foreach(_.own(cp, () => ColumnBridge.unpersistCheckpoint(cp)))
+    cp
+  }
+
+  /** Hands a checkpoint the open scope owns back to the caller: an
+    * operator's returned generation, which a second execution of the
+    * result must still read. */
+  def disown(cp: DataFrame): DataFrame = {
+    Option(current.get).foreach(_.disown(cp))
     cp
   }
 

@@ -19,7 +19,8 @@ object RegistryRunner {
     * also drops what no scope owns — a persist made outside any query
     * (StressMain's, a spec's), Dataset persists in the CacheManager and
     * then the RDD-level ones it never sees (`localCheckpoint()` blocks
-    * included) — and then runs `System.gc()`, because the weak-ref
+    * included, such as the labels `ConnectedComponents` hands back to
+    * its caller) — and then runs `System.gc()`, because the weak-ref
     * ContextCleaner frees broadcasts and shuffle state only when the JVM
     * collects (heavy queries measured ~3x their isolated cost late in a
     * long run without it). A library caller's session needs none of

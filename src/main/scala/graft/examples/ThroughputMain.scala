@@ -120,13 +120,8 @@ object ThroughputMain {
         .toSeq
       if (rs.isEmpty) 0 else rs.max + 1
     }
-    // each query's durationMs phases as p50/p95 ms, e.g.
-    // {"thr_wc":{"addBatch":{"p50":..,"p95":..},...}}
-    val phases = stats.snapshot.toSeq.sortBy(_._1).map { case (q, st) =>
-      st.phasePercentilesMs.toSeq.sortBy(_._1).map { case (k, (p50, p95)) =>
-        val (a, b) = ("%.1f".formatLocal(java.util.Locale.ROOT, p50), "%.1f".formatLocal(java.util.Locale.ROOT, p95))
-        s""""$k":{"p50":$a,"p95":$b}""" }.mkString(s""""$q":{""", ",", "}")
-    }.mkString("{", ",", "}")
+    // each query's durationMs phases as p50/p95 ms, as on /api/status/
+    val phases = graft.streaming.PipelineStats.phasesJson(stats.snapshot)
     val json =
       f"""{"metric":"streaming_throughput","unit":"msgs_per_sec","messages":$total,"cpus":"$cpus","passthrough":$passPerSec%.0f,"wordcount":$wcPerSec%.0f,"words_per_sec":$wordsPerSec%.0f,"phases_ms":$phases}"""
     println(json)

@@ -56,7 +56,10 @@ object ConnectedComponents {
     *        fully distributed either way. 0 forces the distributed loop.
     * @return ("node", "comp") — comp is the min node id reachable;
     *         only nodes appearing in `edges` are labeled (singletons
-    *         are their own component by definition and need no pass)
+    *         are their own component by definition and need no pass).
+    *         On the distributed path they are a local checkpoint that
+    *         the caller owns, inside a query scope too; `ColumnBridge.
+    *         unpersistCheckpoint` or the harness sweep frees it.
     */
   def minLabelPropagation(edges: DataFrame, maxIter: Int = 20,
       driverFallbackEdges: Long = 1000000L): DataFrame = {
@@ -154,6 +157,7 @@ object ConnectedComponents {
       .agg(least(min(col("dst")), col("src")).as("comp"))
       .select(col("src").as("node"), col("comp")))
 
+    var last = labels // the newest checkpoint generation
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -185,14 +189,18 @@ object ConnectedComponents {
         .observe(obs, sum(when(col("comp") < col("old_comp"), 1L).otherwise(0L)).as("changed")))
       val changed = obs.get("changed").asInstanceOf[Long]
       // next is materialized; the intermediate prop generation (its
-      // only consumer) can be released. The final labels stay persisted
-      // until the caller's query scope closes.
+      // only consumer) can be released.
       org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(prop)
+      last = next
       labels = next.select("node", "comp")
       converged = changed == 0
       iter += 1
     }
     und.unpersist()
+    // The final labels stay persisted for the caller, outside the query
+    // scope: with its blocks gone, a checkpoint fails to run again
+    // rather than recompute, and only the caller knows its last run.
+    QueryScope.disown(last)
     labels
   }
 

@@ -357,8 +357,9 @@ object Curation5 {
     * [[Curation8]]) so both replay the identical classifier. */
   private[queries] def knnPredictions(s: SparkSession, dir: String, maxQid: Long): DataFrame = {
     // read twice (queries and corpus) but not persisted: warmed at sf0.1
-    // on 4 cores, q147 took 2.11 s with a persist and 1.93 s without
-    // (medians of 10 interleaved pairs; with faster in 5/10)
+    // on 4 cores (medians of 10 interleaved pairs), q147 took 2.11 s with
+    // a persist and 1.93 s without (with faster in 5/10), q123 1.65 s
+    // and 1.60 s (6/10)
     val coded = sqCoded(s, dir)
     val labels = Tables(s, dir).embeddings.select(col("vec_id"), col("label"))
     val qs = coded.where(col("vec_id") < maxQid)
@@ -464,9 +465,9 @@ object Curation5 {
       Seq(0L -> Seq("join", "window", "stream", "hash")).toDF("qid", "terms"),
       k = 50)
       .select(col("qid"), col("doc_id").as("id"), col("rk"))
-    // read twice, not persisted: warmed at sf0.1 on 4 cores, q129 with
-    // this and perdoc persisted took 2.64 s, 2.54 s with neither
-    // (medians of 10 interleaved pairs; with faster in 5/10)
+    // read twice, not persisted: warmed at sf0.1 on 4 cores, with perdoc
+    // persisted, q129 took 3.13 s with this persist and 3.17 s without
+    // (medians of 10 interleaved pairs; with faster in 3/10)
     val coded = sqCoded(s, dir)
     val qc = coded.where(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("q").as("qc"))

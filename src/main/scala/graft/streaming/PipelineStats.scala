@@ -144,7 +144,6 @@ object PipelineStats {
     * decimal whatever the JVM locale. [[StatsServer.detailJson]] builds
     * the detail object from this row. */
   private[streaming] def statusRow(s: QueryStats, nowMinute: Int, nowMs: Long): List[JField] = {
-    def f1(v: Double) = JDecimal(BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP))
     val minutes = s.minuteSeries(nowMinute, nowMs)
     List(
       "name" -> JString(s.name),
@@ -153,12 +152,23 @@ object PipelineStats {
       "peak_waiting" -> JInt(s.peakWaiting),
       "behind_latest" -> JObject(s.sourceLag.toList.sortBy(_._1).map { case (k, l) => k -> JInt(l) }),
       "avg_time_taken_ms" -> f1(s.avgTimeTakenMs), "95_percentile_ms" -> f1(s.p95TimeTakenMs),
-      "phases_ms" -> JObject(s.phasePercentilesMs.toList.sortBy(_._1).map { case (k, (p50, p95)) =>
-        k -> JObject("p50" -> f1(p50), "p95" -> f1(p95)) }),
+      "phases_ms" -> phasesMs(s),
       "minutes_processed" -> JArray(minutes.map(b => JInt(b.processedCount)).toList),
       "minutes_errors" -> JArray(minutes.map(b => JInt(b.errorCount)).toList),
       "status" -> JString(s.state(nowMinute)))
   }
+
+  private def f1(v: Double) = JDecimal(BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP))
+
+  /** One query's `durationMs` phases as p50/p95 ms, e.g.
+    * `{"addBatch":{"p50":..,"p95":..},...}`. */
+  private def phasesMs(s: QueryStats): JObject =
+    JObject(s.phasePercentilesMs.toList.sortBy(_._1).map { case (k, (p50, p95)) =>
+      k -> JObject("p50" -> f1(p50), "p95" -> f1(p95)) })
+
+  /** Every query's `phases_ms` object, keyed by query, as compact JSON. */
+  def phasesJson(stats: Map[String, QueryStats]): String =
+    render(JObject(stats.toList.sortBy(_._1).map { case (q, s) => q -> phasesMs(s) }))
 
   /** Compact JSON: json4s escapes every control character. */
   private[streaming] def render(v: JValue): String =

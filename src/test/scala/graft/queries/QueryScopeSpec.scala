@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.{QueryScope, RegistryRunner, SparkEntry, SparkSpecBase}
+import graft.operators.ConnectedComponents
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
 /** A registry query releases what it persisted, and nothing else: in a
@@ -11,24 +13,13 @@ class QueryScopeSpec extends SparkSpecBase {
 
   private def persisted = spark.sparkContext.getPersistentRDDs.keySet
 
-  private def eventually(cond: => Boolean): Boolean = {
-    val deadline = System.currentTimeMillis() + 20000
-    var ok = cond
-    while (!ok && System.currentTimeMillis() < deadline) { Thread.sleep(100); ok = cond }
-    ok
-  }
-
   test("a caller's own caches survive a registry query and its action; the query's persists go") {
     try {
       RegistryRunner.sweep(spark)
-      // one cache of the caller's own, and one whose plan is a persist
-      // the query makes itself (q129's SQ8-coded corpus): the query uses
-      // that one and must not release it
       val own = spark.range(1000).selectExpr("id", "id % 7 AS k").persist()
-      val shared = Curation5.sqCoded(spark, sfDir).persist()
-      assert(own.count() == 1000L && shared.count() > 0)
+      assert(own.count() == 1000L)
       val rdds0 = persisted
-      assert(rdds0.size == 2)
+      assert(rdds0.size == 1)
 
       val df = SparkEntry.select(Seq("q129")).head.run(spark, sfDir)
       // a scope stays open only while it owns a persist
@@ -37,10 +28,51 @@ class QueryScopeSpec extends SparkSpecBase {
       // materializes every persist the query made
       df.write.format("noop").mode("overwrite").save()
 
-      assert(eventually(!QueryScope.isOpen(df)), "the query's scope is still listening")
-      assert(eventually(persisted == rdds0), s"query persists remain: $persisted against $rdds0")
+      pollUntil("the query's scope stops listening", 20000L)(!QueryScope.isOpen(df))
+      pollUntil(s"query persists go: $persisted against $rdds0", 20000L)(persisted == rdds0)
       assert(own.storageLevel == StorageLevel.MEMORY_AND_DISK)
-      assert(shared.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally RegistryRunner.sweep(spark)
+  }
+
+  test("a plan the caller cached first is used by the query and never released") {
+    try {
+      RegistryRunner.sweep(spark)
+      // a rebuilt SQ8 coded corpus (q121's persist) does not match its
+      // own earlier cache entry, so no registry query is handed a plan the
+      // caller cached; here the caller caches the plan the build asks for
+      def plan = spark.range(1000).selectExpr("id", "id % 7 AS k")
+      val own = plan.persist()
+      assert(own.count() == 1000L)
+      val rdds0 = persisted
+      var used: org.apache.spark.sql.DataFrame = null
+      val head = QueryScope(spark) {
+        used = QueryScope.persist(plan)
+        val mine = QueryScope.persist(spark.range(50).toDF("x"))
+        mine.join(used, mine("x") === used("id"))
+      }
+      // the build's persist found the caller's cache entry: the guard ran
+      assert(ColumnBridge.cachedPlan(used).exists(p => ColumnBridge.cachedPlan(own).exists(_ eq p)))
+      assert(QueryScope.isOpen(head), "the build persisted nothing of its own")
+      assert(head.count() == 50L)
+      pollUntil("the scope releases", 20000L)(!QueryScope.isOpen(head))
+      pollUntil(s"the build's own persist goes: $persisted against $rdds0", 20000L)(persisted == rdds0)
+      assert(own.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally RegistryRunner.sweep(spark)
+  }
+
+  test("a scoped distributed connected-components result runs again after its scope released") {
+    try {
+      RegistryRunner.sweep(spark)
+      import spark.implicits._
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 5L), (7L, 6L)).toDF("a", "b")
+      // driverFallbackEdges = 0 forces the checkpointed join loop
+      val labels = QueryScope(spark)(ConnectedComponents.minLabelPropagation(edges, driverFallbackEdges = 0L))
+      assert(QueryScope.isOpen(labels), "the loop persisted nothing the scope owns")
+      def read = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val first = read
+      assert(first == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 5L))
+      pollUntil("the connected-components scope releases", 20000L)(!QueryScope.isOpen(labels))
+      assert(read == first)
     } finally RegistryRunner.sweep(spark)
   }
 

@@ -53,6 +53,10 @@ class PipelineStatsSpec extends SparkSpecBase {
       assert(Seq("triggerExecution", "addBatch").forall(phases.contains), s"phases: ${phases.keys}")
       assert(phases.values.forall { case (p50, p95) => 0.0 <= p50 && p50 <= p95 })
       assert("\"phases_ms\":\\{\"addBatch\":\\{\"p50\":[0-9.]+,\"p95\":[0-9.]+\\}".r.findFirstIn(json).isDefined, json)
+      // the THROUGHPUT artifact's phases_ms: the same object, keyed by query
+      val artifact = PipelineStats.phasesJson(Map("stats_probe" -> s))
+      assert(artifact.startsWith("{\"stats_probe\":{\"addBatch\":{\"p50\":"), artifact)
+      assert(json.contains(artifact.stripPrefix("{\"stats_probe\":").stripSuffix("}")), artifact)
       // render path: the minute series draws as a sparkline polyline
       val svg = StatsServer.sparklineSvg(minutes.get)
       assert(svg.contains("<polyline") && svg.contains("peak 3"))
