@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -28,6 +28,13 @@ import scala.util.control.NonFatal
   *    Executions that started before the DataFrame existed (the build's
   *    own eager counts) are ignored.
   *
+  * Release after an action is asynchronous: Spark reports the finished
+  * execution on its listener bus, after the action has returned to the
+  * caller, so for a moment the query's persists are still there. A
+  * caller that needs them gone at a known point calls
+  * `QueryScope.close(df)`, the synchronous release: when it returns,
+  * the persists are released, also when the listener had begun first.
+  *
   * A caller that only plans the query never executes it, so the scope
   * also releases after [[QueryScope.UnrelatedGrace]] unrelated
   * executions AND `graceMs` of wall time; the grace keeps a caller that
@@ -43,7 +50,7 @@ import scala.util.control.NonFatal
   * a persist belongs to the caller. */
 final class QueryScope private (spark: SparkSession, graceMs: Long) extends QueryExecutionListener {
   private var releases = List.empty[(AnyRef, () => Unit)] // newest first
-  private val closed = new AtomicBoolean(false)
+  private var closed = false
   private val unrelated = new AtomicInteger(0)
   @volatile private var head: DataFrame = _
   @volatile private var armedAtMs = 0L
@@ -60,11 +67,15 @@ final class QueryScope private (spark: SparkSession, graceMs: Long) extends Quer
   }
 
   /** Releases every persist the query owns, newest first, and stops
-    * listening. Idempotent. */
-  def close(): Unit = if (closed.compareAndSet(false, true)) {
-    spark.listenerManager.unregister(this)
-    Option(head).foreach(QueryScope.open.remove)
-    synchronized(releases).foreach(_._2())
+    * listening. Idempotent; a call made while another thread releases
+    * returns once that release is done. */
+  def close(): Unit = synchronized {
+    if (!closed) {
+      closed = true
+      spark.listenerManager.unregister(this)
+      releases.foreach(_._2())
+      Option(head).foreach(QueryScope.open.remove)
+    }
   }
 
   private def handle(qe: QueryExecution): Unit = {
@@ -134,7 +145,8 @@ object QueryScope {
     cp
   }
 
-  /** Releases the scope whose query returned `head` now; no-op when it
+  /** Releases the scope whose query returned `head` now, synchronously:
+    * when this returns, the scope's persists are gone. No-op when it
     * owns nothing or has already released. */
   def close(head: DataFrame): Unit = Option(open.get(head)).foreach(_.close())
 

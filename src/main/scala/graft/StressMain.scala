@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * cluster does — whether any operator's pair space, shuffle volume, or
   * skew behavior degrades super-linearly between sf0.1 and 10×.
   *
-  * `sbt "runMain graft.StressMain [gen|run|all]"` — writes to /tmp.
+  * `sbt "runMain graft.StressMain [gen|run|curve|all]"` — writes to
+  * /tmp; `all` (the default) is `gen` then `run`.
   */
 object StressMain {
   val StressDir = "/tmp/graft_stress10"
@@ -162,6 +163,7 @@ object StressMain {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
+    require(Set("gen", "run", "curve", "all")(mode), s"unknown mode $mode: use gen, run, curve or all")
     val spark = SessionTuning.session("graft-stress",
       s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
 
@@ -169,37 +171,6 @@ object StressMain {
       val t0 = System.nanoTime()
       gen(spark, "/root/testdata/sf0.1")
       println(f"[stress] generated 10x data in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    if (mode == "ccmem") {
-      // Measure the driver union-find fallback footprint at a chosen
-      // edge count (default: the 1M directed-edge cutover; 4M measured
-      // ~1.4 GB whole-JVM peak, which is what sized the default DOWN
-      // from 4M). Node ids spread over ~2x the edge count — the
-      // array-width worst case. Peak heap is read from the JVM memory
-      // pools (reset before the run). NOTE: local mode shares one JVM,
-      // so the peak includes executor-side persists, an upper bound on
-      // the driver-only footprint.
-      import java.lang.management.ManagementFactory
-      import scala.jdk.CollectionConverters._
-      val undirectedEdges = args.lift(1).map(_.toLong).getOrElse(500000L)
-      val edges = spark.range(0L, undirectedEdges)
-        .select(col("id").as("src"),
-          pmod(col("id") * lit(2654435761L), lit(undirectedEdges * 2 + 37)).as("dst"))
-        .where(col("src") =!= col("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      edges.count() // materialize so generation cost doesn't pollute the peak
-      val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getType == java.lang.management.MemoryType.HEAP)
-      System.gc()
-      pools.foreach(_.resetPeakUsage())
-      val base = pools.map(_.getPeakUsage.getUsed).sum / 1048576
-      val t0 = System.nanoTime()
-      val n = graft.operators.ConnectedComponents
-        .minLabelPropagation(edges, driverFallbackEdges = Long.MaxValue).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val peak = pools.map(_.getPeakUsage.getUsed).sum / 1048576
-      println(f"[stress] cc driver fallback at ${undirectedEdges * 2} directed edges: labeled=$n in ${sec}%.1f s, heap base $base MB -> peak $peak MB (delta ${peak - base} MB)")
-      edges.unpersist()
     }
     val results = Seq.newBuilder[RegistryRunner.Timed]
 
@@ -267,105 +238,6 @@ object StressMain {
       // the r16 VERDICT #6 done-criterion is zero dropped groups at 30×)
       graft.metrics.CapObservatory.fence(spark)
       println(s"[stress] caps ${graft.metrics.CapObservatory.snapshotJson()}")
-    }
-
-    if (mode == "bloomshard" || mode == "all") {
-      // Sharded-bloom path (q114's >10^9-span scale plumbing): build S
-      // hash-partitioned sketches with per-shard timings, probe with
-      // per-span shard routing, and check the confirmed output is
-      // IDENTICAL to the single-sketch path — the property that makes
-      // shard count a pure memory knob. Peak sketch memory per
-      // task/driver is one shard, so S scales the span capacity
-      // linearly at constant per-JVM footprint.
-      val S = 4
-      val dir = StressDir
-      if (!new java.io.File(s"$dir/part.parquet").exists()) gen(spark, "/root/testdata/sf0.1")
-      val single = graft.queries.Curation4.bloomIncrement(spark, dir, shards = 1)
-        .collect().toSeq
-      RegistryRunner.sweep(spark)
-      val (docs, baseDocs) = graft.queries.Curation4.bloomSpanDocs(spark, dir)
-      val baseSpans = docs.where(col("_slice") =!= 0)
-        .select(explode(col("_sp")).as("span"))
-      val perShard = math.max(baseDocs * 256L / S, 1000L)
-      (0 until S).foreach { sh =>
-        val t0 = System.nanoTime()
-        val bf = graft.queries.Curation4.buildShardBloom(baseSpans, S, sh, perShard)
-        println(f"[stress] bloomshard build $sh/$S ${(System.nanoTime() - t0) / 1e9}%6.2f s  " +
-          f"(${bf.bitSize() / 8 / 1024} KiB sketch)")
-      }
-      RegistryRunner.sweep(spark)
-      val t0 = System.nanoTime()
-      val sharded = graft.queries.Curation4.bloomIncrement(spark, dir, shards = S)
-        .collect().toSeq
-      println(f"[stress] bloomshard probe+confirm S=$S ${(System.nanoTime() - t0) / 1e9}%6.2f s  " +
-        f"rows=${sharded.size}")
-      require(sharded == single,
-        s"sharded output diverged: ${sharded.size} rows vs ${single.size}")
-      println(s"[stress] bloomshard S=$S output == S=1 output (${single.size} rows)")
-      RegistryRunner.sweep(spark)
-    }
-
-    if (mode == "substrgate" || mode == "all") {
-      // Live exact-substring gate at 10x sf0.1 (the r13 SCALE ask):
-      // docs/s through hits(L=50) and resident keyed-state rows, S=1
-      // vs S=4 gram-hash shards. Each shard consumes the FULL stream
-      // (production shape: S parallel queries over the same source,
-      // each filtering to its hash range), so per-shard wall time is
-      // what a parallel deployment's rate is set by, and per-shard
-      // state is what maxGrams actually bounds. Shards run
-      // sequentially here to keep the box uncontended; ShardedGateSpec
-      // owns the S-invariance (outputs re-checked cheaply anyway).
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import graft.streaming.StreamingSubstringGate
-      import graft.streaming.StreamingSubstringGate.DocArrival
-      import spark.implicits._
-      val dir = StressDir
-      if (!new java.io.File(s"$dir/documents.parquet").exists())
-        gen(spark, "/root/testdata/sf0.1")
-      val arrivals = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "source", "text").collect()
-        .map(r => DocArrival(r.getLong(0), r.getString(1), r.getString(2), r.getLong(0)))
-        .sortBy(_.seq)
-      val L = graft.queries.Curation15.MinDupTokens
-      def runGate(shard: Int, shards: Int): (Double, Long, Long) = {
-        // Independent sequential queries in ONE JVM: clear the
-        // JVM-static resident-gram gauge so run N's leftover count
-        // doesn't spuriously trip maxGrams on run N+1 (ADVICE r14).
-        StreamingSubstringGate.resetResidentGrams()
-        val name = s"substr_tp_${shards}_$shard"
-        val input = MemoryStream[DocArrival](spark, 8)
-        val q = StreamingSubstringGate.hits(input.toDS(), L, shard = shard, shards = shards)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        val t0 = System.nanoTime()
-        arrivals.grouped(5000).foreach(c => input.addData(c.toSeq))
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val stateRows = Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-        val hits = spark.table(name).count()
-        q.stop()
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        RegistryRunner.sweep(spark)
-        (sec, stateRows, hits)
-      }
-      val (s1Sec, s1State, s1Hits) = runGate(0, 1)
-      println(f"[stress] substrgate S=1    ${s1Sec}%6.2f s  " +
-        f"${arrivals.length / s1Sec}%8.0f docs/s  state=$s1State%d grams  hits=$s1Hits%d")
-      val S = 4
-      val per = (0 until S).map(sh => sh -> runGate(sh, S))
-      per.foreach { case (sh, (sec, st, h)) =>
-        println(f"[stress] substrgate S=$S sh$sh ${sec}%6.2f s  " +
-          f"${arrivals.length / sec}%8.0f docs/s  state=$st%d grams  hits=$h%d")
-      }
-      val worst = per.map(_._2._1).max
-      println(f"[stress] substrgate S=$S parallel-deployment rate " +
-        f"${arrivals.length / worst}%.0f docs/s (slowest shard); " +
-        f"state split ${per.map(_._2._2).mkString("/")} of $s1State")
-      require(per.map(_._2._3).sum == s1Hits,
-        s"sharded hit total ${per.map(_._2._3).sum} != S=1 $s1Hits")
-      require(per.map(_._2._2).sum == s1State,
-        s"sharded state total ${per.map(_._2._2).sum} != S=1 $s1State")
     }
 
     if (mode == "run" || mode == "all") {

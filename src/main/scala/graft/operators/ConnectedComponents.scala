@@ -45,10 +45,10 @@ object ConnectedComponents {
     *        footprint at the 1M default, all primitive arrays (no
     *        Row/boxing survives the collect): 16 B/directed edge packed
     *        collect + sorted id dedup + int parent / long comp arrays +
-    *        two result broadcasts — ~50 MB live. Measured
-    *        (`StressMain ccmem`, whole-local-JVM peak incl. the edge
-    *        persist and executor churn — an upper bound on the
-    *        driver-only share): ~330 MB at the 1M default over 750k
+    *        two result broadcasts — ~50 MB live. Measured (a
+    *        StressMain `ccmem` probe, since retired; whole-local-JVM
+    *        peak incl. the edge persist and executor churn — an upper
+    *        bound on the driver-only share): ~330 MB at the 1M default over 750k
     *        nodes, ~1.2 GB at 4M over 3M nodes — which is why the
     *        default is 1M, not 4M; above it the distributed loop's
     *        per-round cost amortizes anyway. The

@@ -21,7 +21,7 @@ object StreamSink {
   /** Console sink (≙ the print-to-stdout examples). */
   final case class Console(outputMode: OutputMode = OutputMode.Append) extends StreamSink {
     def start(ds: Dataset[_], queryName: String, trigger: Trigger): StreamingQuery =
-      ds.toDF().writeStream.format("console")
+      ds.toDF().writeStream.format("console").queryName(queryName)
         .outputMode(outputMode).trigger(trigger).start()
   }
 

@@ -39,16 +39,15 @@ object Curation4 {
   // hash-partitions into S independent sketches built and probed per
   // range — IMPLEMENTED: [[bloomIncrement]] takes the shard count, the
   // probe routes each span to its own shard's sketch, and the output is
-  // S-independent (StressMain's bloomshard mode times per-shard builds
-  // and checks S=4 ≡ S=1). Dolma's production mode skips the confirm
-  // join entirely and accepts the fp rate — that variant is this plan
-  // minus the semi-join.
+  // S-independent (BloomShardSpec checks S=4 ≡ S=1 at sf0.01). Dolma's
+  // production mode skips the confirm join entirely and accepts the fp
+  // rate — that variant is this plan minus the semi-join.
   /** The shingled doc relation (persisted) plus the observed base-doc
     * count — the sizing metric rides the cache-materialization job via
     * observe() (the ConnectedComponents trick): ONE pass tokenizes,
     * shingles, fills the cache, and reports the base-doc count — no
     * separate filtered count job over the materialized relation. */
-  private[graft] def bloomSpanDocs(s: SparkSession, dir: String): (DataFrame, Long) = {
+  private def bloomSpanDocs(s: SparkSession, dir: String): (DataFrame, Long) = {
     val t = col("_t")
     def spans(tokens: Column): Column =
       array_distinct(graft.functions.expr.TextExpressions.spanJoin(tokens, 8))
@@ -67,7 +66,7 @@ object Curation4 {
     * in shard `sh` of `shards` — a column-pruned, shard-filtered pass, so
     * peak sketch memory anywhere (executor merge tree, driver, probe-side
     * plan reference) is ONE shard, never the full span space. */
-  private[graft] def buildShardBloom(baseSpans: DataFrame, shards: Int, sh: Int,
+  private def buildShardBloom(baseSpans: DataFrame, shards: Int, sh: Int,
       expected: Long): org.apache.spark.util.sketch.BloomFilter =
     baseSpans
       .where(pmod(xxhash64(col("span")), lit(shards)) === sh)

@@ -18,8 +18,8 @@ import org.apache.spark.sql.DataFrame
   * pair batch cannot corrupt the index).
   *
   * Scale posture: this state is NODE-count-bound — the same bound as
-  * CC's packed driver fallback (~50 MB at 1M edges, measured in
-  * `StressMain ccmem`), because dedup pair sets are result-sized even
+  * CC's packed driver fallback (~50 MB at 1M edges, measured by a
+  * StressMain `ccmem` probe, since retired), because dedup pair sets are result-sized even
   * for huge corpora. Past that bound, the batch path is q158's
   * contraction (delta-sized distributed CC per ingest); this class is
   * the serving-cache tier in front of it, mirroring how the reference
@@ -112,7 +112,7 @@ final class LiveClusterIndex(maxNodes: Long = LiveClusterIndex.DefaultMaxNodes) 
 object LiveClusterIndex {
   /** Default node bound: 4M entries ≈ 2 LongMap slots + compressed-root
     * churn ≈ low-hundreds of MB on the driver — the same envelope as
-    * CC's packed driver fallback cutover (StressMain ccmem). */
+    * CC's packed driver fallback cutover. */
   val DefaultMaxNodes: Long = 4000000L
 }
 

@@ -87,8 +87,8 @@ object StreamingSubstringGate {
   private val residentGrams = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Test/harness hook: clear the JVM-static gauge between INDEPENDENT
-    * gate queries run sequentially in one JVM (StressMain's substrgate
-    * mode runs 5 full-corpus gates back-to-back; without a reset the
+    * gate queries run sequentially in one JVM (a spec running several
+    * full-corpus gates back-to-back; without a reset the
     * monotonic gauge reaches ~S+1 times the corpus's distinct-gram
     * count and can spuriously trip `maxGrams` on the later runs even
     * though each query's live state is far below the bound). NOT for
@@ -105,7 +105,7 @@ object StreamingSubstringGate {
     *   exact — every gram's full occurrence history lands in exactly
     *   one shard, so the UNION of the S shard gates' outputs is
     *   row-identical to a single S=1 gate (ShardedGateSpec pins
-    *   S=4 ≡ S=1, the StressMain bloomshard discipline). Run each
+    *   S=4 ≡ S=1). Run each
     *   shard as its own streaming query (own checkpoint, own JVM/
     *   cluster), and `maxGrams` bounds EACH shard — S multiplies the
     *   gate's total gram capacity.

@@ -9,7 +9,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * keep EXACTLY the elements the interpreted ArrayFilter lambda kept —
   * same xxhash64(seed 42) probe hash, same pmod shard routing, same
   * element order — for both the single-sketch (q114, streaming ingest)
-  * and sharded (StressMain bloomshard) paths. The candidate set feeds
+  * and sharded (`Curation4.bloomIncrement` with shards > 1) paths. The candidate set feeds
   * an exact confirm join, so a false NEGATIVE here (an element the
   * lambda kept but the kernel dropped) is a correctness break, not an
   * fp-rate shift. */

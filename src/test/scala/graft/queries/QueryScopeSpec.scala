@@ -34,6 +34,24 @@ class QueryScopeSpec extends SparkSpecBase {
     } finally RegistryRunner.sweep(spark)
   }
 
+  test("QueryScope.close(df) releases the query's persists before it returns") {
+    try {
+      RegistryRunner.sweep(spark)
+      val own = spark.range(1000).selectExpr("id", "id % 7 AS k").persist()
+      assert(own.count() == 1000L)
+      val rdds0 = persisted
+      val df = SparkEntry.select(Seq("q129")).head.run(spark, sfDir)
+      assert(QueryScope.isOpen(df), "q129 persisted nothing of its own: the check below is vacuous")
+      df.write.format("noop").mode("overwrite").save()
+      // the listener may be releasing at this moment, or not yet; close
+      // returns only once the release is done either way
+      QueryScope.close(df)
+      assert(persisted == rdds0)
+      assert(!QueryScope.isOpen(df))
+      assert(own.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally RegistryRunner.sweep(spark)
+  }
+
   test("a plan the caller cached first is used by the query and never released") {
     try {
       RegistryRunner.sweep(spark)

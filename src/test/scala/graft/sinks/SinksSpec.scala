@@ -1,5 +1,8 @@
 package graft.sinks
 
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpecBase
 import graft.pipeline.{Message, Pipeline, StreamSink}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -31,15 +34,63 @@ class SinksSpec extends SparkSpecBase {
     assert(sink.read(spark).as[(String, Long)].collect().toMap == Map("oak" -> 2L))
   }
 
-  test("upsert sink survives a crash between its two renames: the replay keeps every key") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert-crash").toString + "/tbl"
-    val sink = new UpsertParquetSink(dir, Seq("word"))
-    sink.write(Seq(("oak", 1L), ("cat", 2L)).toDF("word", "count"), 0L)
-    // batch 1 crashed after moving the live table aside, before moving
-    // its new table in: no live table, marker still at batch 0
-    java.nio.file.Files.move(java.nio.file.Paths.get(dir), java.nio.file.Paths.get(dir + "__old_1"))
-    sink.write(Seq(("cat", 5L)).toDF("word", "count"), 1L) // at-least-once replay
-    assert(sink.read(spark).as[(String, Long)].collect().toMap == Map("oak" -> 1L, "cat" -> 5L))
+  // Crash states of `write`, each planted from real runs: batch 0
+  // {oak→1, cat→2} committed, batch 1 {cat→5} crashed at one step. The
+  // replay of batch 1 and one more batch must give the uninterrupted
+  // run's table and leave one version and one commit.
+  private val crashBatches = Seq(Seq(("oak", 1L), ("cat", 2L)), Seq(("cat", 5L)), Seq(("dog", 3L)))
+  private def writeBatch(sink: UpsertParquetSink, id: Int): Unit =
+    sink.write(crashBatches(id).toDF("word", "count"), id.toLong)
+  private def tableAfter(batches: Int): (Path, UpsertParquetSink) = {
+    val dir = Files.createTempDirectory("upsert-crash").resolve("tbl")
+    val sink = new UpsertParquetSink(dir.toString, Seq("word"))
+    (0 until batches).foreach(writeBatch(sink, _))
+    (dir, sink)
+  }
+  private def copyInto(from: Path, to: Path): Unit = {
+    val all = Files.walk(from)
+    try all.iterator().asScala.toList.foreach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally all.close()
+  }
+  private def names(dir: Path): Seq[String] =
+    Files.list(dir).iterator().asScala.map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSeq.sorted
+
+  Seq[(String, (Path, Path) => Unit)](
+    "(a): v1 half-written, commit at 0" -> { (done: Path, crashed: Path) =>
+      copyInto(done.resolve("v1"), crashed.resolve("v1"))
+      Files.delete(crashed.resolve("v1/_SUCCESS"))
+      Files.list(crashed.resolve("v1")).iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .foreach(p => Files.write(p, Files.readAllBytes(p).take(Files.size(p).toInt / 2)))
+    },
+    "(b): v1 complete, commit at 0" -> { (done: Path, crashed: Path) =>
+      copyInto(done.resolve("v1"), crashed.resolve("v1"))
+    },
+    "(c): commit at 1, v0 and commit 0 not yet deleted" -> { (done: Path, crashed: Path) =>
+      copyInto(done.resolve("v1"), crashed.resolve("v1"))
+      copyInto(done.resolve("_commits"), crashed.resolve("_commits"))
+    }
+  ).foreach { case (state, plant) =>
+    test(s"upsert sink crash state $state") {
+      val (done, doneSink) = tableAfter(2)
+      val (crashed, sink) = tableAfter(1)
+      plant(done, crashed)
+      writeBatch(sink, 1) // at-least-once replay of the crashed batch
+      writeBatch(sink, 2)
+      writeBatch(doneSink, 2)
+      val want = doneSink.read(spark).as[(String, Long)].collect().toMap
+      assert(want == Map("oak" -> 1L, "cat" -> 5L, "dog" -> 3L))
+      assert(sink.read(spark).as[(String, Long)].collect().toMap == want)
+      assert(names(crashed) == Seq("_commits", "v2"))
+      assert(names(crashed.resolve("_commits")) == Seq("2"))
+    }
+  }
+
+  test("upsert sink read fails naming the table before its first commit") {
+    val dir = Files.createTempDirectory("upsert-empty").resolve("tbl").toString
+    val e = intercept[IllegalStateException](new UpsertParquetSink(dir, Seq("k")).read(spark))
+    assert(e.getMessage.contains(dir))
   }
 
   test("upsert sink dedupes within a batch (last write wins per key)") {
@@ -80,6 +131,13 @@ class SinksSpec extends SparkSpecBase {
     run.stop()
     val got = sink.read(spark).as[(String, String)].collect().toMap
     assert(got == Map("1" -> "updated", "2" -> "second"))
+  }
+
+  test("console stream sink starts its query under the pipeline's query name") {
+    val input = MemoryStream[Message[String]](spark, 1)
+    val run = Pipeline(spark).addRamp("s", input.toDS())
+      .addSink("s", StreamSink.Console(), "console_q").run()
+    try assert(run.queries.map(_.name) == Seq("console_q")) finally run.stop()
   }
 
   test("retrying writer: retryables succeed, hard failures surface") {

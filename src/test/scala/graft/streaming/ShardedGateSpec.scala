@@ -5,8 +5,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import StreamingSubstringGate.{DocArrival, SubstringHit}
 
-/** S-invariance for the bounded streaming gates (the StressMain
-  * bloomshard discipline, S=4 ≡ S=1): sharding exists so the per-JVM
+/** S-invariance for the bounded streaming gates (S=4 ≡ S=1, as
+  * BloomShardSpec checks for q114's sharded bloom): sharding exists so the per-JVM
   * state bounds (`maxGrams`, `maxNodesPerShard`) become per-SHARD
   * bounds — S parallel gates on S hosts multiply capacity — and that
   * is only sound if the union of the shard outputs is exactly the
